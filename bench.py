@@ -396,6 +396,15 @@ def main() -> None:
         " a FULL run resets it, an --only run merges into it)",
     )
     args = ap.parse_args()
+    if os.environ.get("SPARK_GRAFT_MATERIALIZE") == "persist_disk":
+        # persist() registers each relation with the session's
+        # CacheManager, so a later query would reuse bytes an earlier
+        # one computed (see materialize.py): the timings would be wrong
+        sys.exit(
+            "bench.py: SPARK_GRAFT_MATERIALIZE=persist_disk is not "
+            "supported: cached relations would leak across queries; "
+            "unset it"
+        )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 SIM_SCALE = 6  # similarity rounding — stable ranking + compact storage
 SIM_DECIMAL = "decimal(18,6)"
+INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def item_counts(interactions: DataFrame, *, item_col: str) -> DataFrame:
@@ -93,13 +94,23 @@ def item_similarity(
     pair into ONE int64 — ``(item_a << 32) | item_b`` — before the
     pair-count aggregation, so the model's dominant exchange shuffles
     an 8-byte key instead of two (guide §2.3: narrower types / pack
-    the key). Requires integral ids in ``[0, 2^32)``; the packing
-    expression raises on any out-of-range id instead of silently
-    colliding, and the unpacked columns are cast back to the source
-    dtype so the schema is untouched. For id spaces wider than 32
-    bits, dictionary-encode first (rank join against the item
-    dimension) — not needed for any catalog-sized id space.
+    the key). Requires integral ids in ``[0, 2^32)``: any other item
+    dtype (double, decimal, string) raises ``ValueError`` when the plan
+    is built, since ``cast("long")`` would truncate ``1.5`` or
+    ``'007'`` silently; the packing expression raises on any
+    out-of-range id instead of silently colliding, and the unpacked
+    columns are cast back to the source dtype so the schema is
+    untouched. For id spaces wider than 32 bits, dictionary-encode
+    first (rank join against the item dimension) — not needed for any
+    catalog-sized id space.
     """
+    if pack_pair_keys:
+        item_type = dict(interactions.dtypes)[item_col]
+        if item_type not in INTEGRAL_TYPES:
+            raise ValueError(
+                "pack_pair_keys requires an integral item column; "
+                f"{item_col!r} is {item_type}"
+            )
     if max_basket_size is not None:
         interactions = cap_basket_size(
             interactions,
@@ -156,7 +167,6 @@ def item_similarity(
             .drop("__ka", "__kb")
         )
     if pack_pair_keys:
-        item_type = dict(interactions.dtypes)[item_col]
         la, lb = F.col("item_a").cast("long"), F.col("item_b").cast("long")
         in_range = (
             (la >= 0) & (la < F.lit(1 << 32)) & (lb >= 0) & (lb < F.lit(1 << 32))

@@ -1,7 +1,8 @@
 """Recommender evaluation (SURVEY.md §2.10 M9-M11).
 
-Coverage (M9, reference dags/daily_pipeline.py:483-488) via semi-join
-counts; precision@k (M10, dags/daily_pipeline.py:490-535) computed
+Coverage (M9, reference dags/daily_pipeline.py:483-488) in one
+aggregation over eval left-joined to the distinct train users and
+items; precision@k (M10, dags/daily_pipeline.py:490-535) computed
 EXHAUSTIVELY over all eval users — the reference's unseeded 100-user
 sample was a perf hack on pandas; distributed we can afford every user,
 deterministically. M11's best-model compare-and-swap is plain driver
@@ -13,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_mlops_spark.operators.joins import semi_join
-
 
 def coverage(
     train: DataFrame,
@@ -24,15 +23,27 @@ def coverage(
     item_col: str,
 ) -> DataFrame:
     """M9: one row — fraction of eval rows whose user (resp. item)
-    appears in training, plus overall row coverage."""
-    train_users = train.select(user_col).distinct()
-    train_items = train.select(item_col).distinct()
-    user_cov = semi_join(eval_df, train_users, user_col).count()
-    item_cov = semi_join(eval_df, train_items, item_col).count()
-    both_cov = semi_join(
-        semi_join(eval_df, train_users, user_col), train_items, item_col
-    ).count()
-    total = eval_df.count()
+    appears in training, plus overall row coverage.
+
+    One action: each eval row is left-joined to the distinct train
+    users and the distinct train items, each side tagged with a flag
+    column, and the four counts come from one aggregation. A null key
+    never matches, so it counts as not covered."""
+    train_users = train.select(user_col, F.lit(True).alias("__u")).distinct()
+    train_items = train.select(item_col, F.lit(True).alias("__i")).distinct()
+    both = F.col("__u") & F.col("__i")
+    total, user_cov, item_cov, both_cov = (
+        eval_df.select(user_col, item_col)
+        .join(train_users, user_col, "left")
+        .join(train_items, item_col, "left")
+        .agg(
+            F.count(F.lit(1)),
+            F.count("__u"),
+            F.count("__i"),
+            F.count(F.when(both, True)),
+        )
+        .collect()[0]
+    )
     spark = eval_df.sparkSession
     denom = max(total, 1)
     return spark.createDataFrame(

@@ -8,6 +8,15 @@ function composed lazily in one session; medallion layer boundaries
 stay explicit parquet materializations because downstream consumers
 (dashboard, Trino-role SQL) read those paths — that's product contract,
 not an optimizer choice (SURVEY.md §4).
+
+`run_daily` reads bronze, silver, the ML train/eval split and the
+item-similarity table back from the lake right after writing them.
+Each later stage then scans one small written partition instead of
+re-running the plan above it: without the read-back, the split's
+distinct shuffle over silver would run again for training and for
+every evaluation action. The read-backs pass the schema just written,
+so no job runs to infer it from a parquet footer, and a day with no
+orders reads back as an empty frame instead of failing.
 """
 
 from __future__ import annotations
@@ -152,22 +161,20 @@ def run_daily(
     promoted per the M11 CAS rule — the reference's
     evaluate >> register_to_wandb tail (dags/daily_pipeline.py:647-729)
     without the external registry."""
-    bronze = extract(source_orders, cfg)
-    lake.write_partition(
-        bronze, base=cfg.base, layer="bronze", entity="orders", ds=cfg.ds
-    )
-    bronze = lake.read_entity(
-        spark, base=cfg.base, layer="bronze", entity="orders", ds=cfg.ds
-    )
 
-    silver = to_silver(bronze, cfg)
-    lake.write_partition(
-        silver.drop("date"), base=cfg.base, layer="silver", entity="orders",
-        ds=cfg.ds,
-    )
-    silver = lake.read_entity(
-        spark, base=cfg.base, layer="silver", entity="orders", ds=cfg.ds
-    )
+    def land(df: DataFrame, layer: str, entity: str) -> DataFrame:
+        """Write one partition and read it back with the schema just
+        written (the read-back includes the partition column)."""
+        lake.write_partition(
+            df, base=cfg.base, layer=layer, entity=entity, ds=cfg.ds
+        )
+        return lake.read_entity(
+            spark, base=cfg.base, layer=layer, entity=entity, ds=cfg.ds,
+            schema=lake.written_schema(df),
+        )
+
+    bronze = land(extract(source_orders, cfg), "bronze", "orders")
+    silver = land(to_silver(bronze, cfg).drop("date"), "silver", "orders")
 
     for name, df in to_gold(silver, cfg).items():
         lake.write_partition(
@@ -175,22 +182,9 @@ def run_daily(
         )
 
     train_df, eval_df = ml_prep(silver, cfg)
-    lake.write_partition(
-        train_df, base=cfg.base, layer="gold", entity="ml/train", ds=cfg.ds
-    )
-    lake.write_partition(
-        eval_df, base=cfg.base, layer="gold", entity="ml/eval", ds=cfg.ds
-    )
-
-    sim = train(train_df, cfg)
-    lake.write_partition(
-        sim, base=cfg.base, layer="gold", entity="ml/item_similarity",
-        ds=cfg.ds,
-    )
-    sim = lake.read_entity(
-        spark, base=cfg.base, layer="gold", entity="ml/item_similarity",
-        ds=cfg.ds,
-    ).drop("date")
+    train_df = land(train_df, "gold", "ml/train").drop("date")
+    eval_df = land(eval_df, "gold", "ml/eval").drop("date")
+    sim = land(train(train_df, cfg), "gold", "ml/item_similarity").drop("date")
 
     metrics = evaluate_model(train_df, eval_df, sim, cfg)
     metrics_df = spark.createDataFrame(

@@ -13,6 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DateType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 
 def layer_path(base: str, layer: str, entity: str) -> str:
@@ -47,6 +55,31 @@ def write_partition(
     return path
 
 
+def _nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def written_schema(df: DataFrame, partition_col: str = "date") -> StructType:
+    """The schema :func:`read_entity` infers for a frame that
+    :func:`write_partition` wrote with ``ds``: its columns, nested
+    ones included, made nullable (a parquet read makes them so), then
+    the ``YYYY-MM-DD`` partition column as a date."""
+    return StructType(
+        [*_nullable(df.schema).fields, StructField(partition_col, DateType(), True)]
+    )
+
+
 def read_entity(
     spark: SparkSession,
     *,
@@ -55,10 +88,17 @@ def read_entity(
     entity: str,
     ds: str | None = None,
     partition_col: str = "date",
+    schema: StructType | None = None,
 ) -> DataFrame:
     """S3/S4: read an entity; with ds, the filter prunes to one
-    partition directory (check .explain for PartitionFilters)."""
-    df = spark.read.parquet(layer_path(base, layer, entity))
+    partition directory (check .explain for PartitionFilters).
+
+    ``schema`` skips inference, which runs a job that reads a parquet
+    footer, and reads an entity with no data files yet (a day with no
+    rows) as an empty frame; pass it when the schema is known, e.g.
+    :func:`written_schema` of the frame just written."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(layer_path(base, layer, entity))
     if ds is not None:
         df = df.where(F.col(partition_col) == ds)
     return df

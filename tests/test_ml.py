@@ -4,6 +4,7 @@ split/dedup invariants (SURVEY.md §7 hard parts 1-3)."""
 from __future__ import annotations
 
 import math
+from decimal import Decimal
 
 from pyspark.sql import functions as F
 
@@ -136,20 +137,28 @@ def test_accumulate_eval_keeps_latest(spark):
 
 
 def test_coverage_and_precision(spark):
+    # null keys on either side never count as covered
     train = spark.createDataFrame(
-        [("u1", "A"), ("u2", "B")], "user string, item string"
+        [("u1", "A"), ("u2", "B"), (None, "A"), ("u1", None)],
+        "user string, item string",
     )
     ev = spark.createDataFrame(
-        [("u1", "B"), ("u2", "C"), ("u9", "A"), ("u9", "Z")],
+        [
+            ("u1", "B"), ("u2", "C"), ("u9", "A"), ("u9", "Z"),
+            (None, "A"), ("u1", None),
+        ],
         "user string, item string",
     )
     cov = evaluate.coverage(
         train, ev, user_col="user", item_col="item"
     ).collect()[0]
-    assert cov["eval_rows"] == 4
-    assert cov["user_coverage"] == 0.5  # u1,u2 rows in train users
-    # items in train: {A, B}; eval items B, C, A, Z -> covered rows 2/4
+    assert cov["eval_rows"] == 6
+    # train users {u1, u2}: rows (u1,B), (u2,C), (u1,None) -> 3/6
+    assert cov["user_coverage"] == 0.5
+    # train items {A, B}: rows (u1,B), (u9,A), (None,A) -> 3/6
     assert cov["item_coverage"] == 0.5
+    # both: only (u1,B) -> 1/6
+    assert cov["overall_coverage"] == round(1 / 6, 6)
     recs = spark.createDataFrame(
         [("u1", "B", 1), ("u1", "C", 2), ("u2", "C", 1), ("u2", "A", 2)],
         "user string, item string, rank int",
@@ -473,6 +482,21 @@ def test_item_similarity_pack_pair_keys_identical(spark):
         item_similarity(
             bad, user_col="u", item_col="item", pack_pair_keys=True
         ).collect()
+
+    # non-integral ids would truncate through cast("long") (1.5 -> 1,
+    # '007' -> 7): refused when the plan is built, before any job runs
+    for ids, dtype in (
+        ((1.5, 1.0), "double"),
+        ((Decimal("1.50"), Decimal("2.00")), "decimal(10,2)"),
+        (("007", "7"), "string"),
+    ):
+        frac = spark.createDataFrame(
+            [("u1", i) for i in ids], f"u string, item {dtype}"
+        )
+        with pytest.raises(ValueError, match="pack_pair_keys.*integral"):
+            item_similarity(
+                frac, user_col="u", item_col="item", pack_pair_keys=True
+            )
 
 
 def test_item_similarity_touching_items_is_pure_pruning(spark):

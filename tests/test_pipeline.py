@@ -5,15 +5,28 @@ fixture contract, FIXTURES.md §1), plus the serving layer."""
 from __future__ import annotations
 
 import datetime as dt
+import random
+from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType
 
 from data_pipeline_mlops_spark.plans.medallion import (
     MedallionConfig,
     run_daily,
+    run_range,
 )
 from data_pipeline_mlops_spark.serve import Recommender
+from data_pipeline_mlops_spark.sources import medallion as lake
+
+ORDERS_SCHEMA = (
+    "order_id string, order_date timestamp, customer_id string,"
+    "product_name string, category string, price double, quantity int,"
+    "total double, status string"
+)
 
 
 def _source_orders(spark):
@@ -58,12 +71,29 @@ def _source_orders(spark):
             "completed",
         )
     )
-    return spark.createDataFrame(
-        rows,
-        "order_id string, order_date timestamp, customer_id string,"
-        "product_name string, category string, price double, quantity int,"
-        "total double, status string",
-    )
+    return spark.createDataFrame(rows, ORDERS_SCHEMA)
+
+
+def _dense_orders(spark):
+    """400 completed orders on 2024-03-01: 40 customers over 15
+    products, dense enough that evaluated users get hits."""
+    rng = random.Random(7)
+    day = dt.datetime(2024, 3, 1, 0, 0)
+    rows = [
+        (
+            f"D{i:05d}",
+            day + dt.timedelta(minutes=3 * i),
+            f"C{rng.randrange(40):02d}",
+            f"P{min(rng.randrange(15), rng.randrange(15)):02d}",
+            "Books",
+            10.0,
+            1,
+            10.0,
+            "completed",
+        )
+        for i in range(400)
+    ]
+    return spark.createDataFrame(rows, ORDERS_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -72,6 +102,26 @@ def pipeline_run(spark, tmp_path_factory):
     cfg = MedallionConfig(base=base, ds="2024-03-01")
     metrics = run_daily(spark, _source_orders(spark), cfg)
     return base, cfg, metrics
+
+
+@pytest.fixture(scope="module")
+def dense_run(spark, tmp_path_factory):
+    """run_daily on the dense orders, recording every read-back it
+    makes: (read_entity keyword arguments, schema of the frame)."""
+    base = str(tmp_path_factory.mktemp("dense_lake"))
+    cfg = MedallionConfig(base=base, ds="2024-03-01")
+    reads = []
+    read_entity = lake.read_entity
+
+    def spy(*args, **kwargs):
+        df = read_entity(*args, **kwargs)
+        reads.append((kwargs, df.schema))
+        return df
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(lake, "read_entity", spy)
+        metrics = run_daily(spark, _dense_orders(spark), cfg)
+    return base, cfg, metrics, reads
 
 
 def test_layers_written_and_pruned(spark, pipeline_run):
@@ -176,3 +226,114 @@ def test_run_daily_with_registry_promotion(spark, tmp_path):
         spark, registry_path=rpath, name="item_similarity"
     )
     assert sim.count() > 0
+
+
+def _partition_rows(base: str, entity: str, ds: str) -> list[dict]:
+    """One written gold partition, read with pyarrow instead of Spark."""
+    return pq.read_table(f"{base}/gold/{entity}/date={ds}").to_pylist()
+
+
+def _recompute_metrics(base: str, cfg: MedallionConfig) -> dict:
+    """run_daily's metrics in plain Python from the written train/eval
+    split and similarity table: coverage (M9), then each user's top-n
+    recommendations (score = sum of cosine over owned items, owned items
+    masked, ties by item) and precision@k over them (M7, M10)."""
+    u, i = cfg.customer_col, cfg.product_col
+    train = [(r[u], r[i]) for r in _partition_rows(base, "ml/train", cfg.ds)]
+    ev = [(r[u], r[i]) for r in _partition_rows(base, "ml/eval", cfg.ds)]
+    train_users = {x for x, _ in train if x is not None}
+    train_items = {y for _, y in train if y is not None}
+    n = len(ev)
+
+    def frac(k: int) -> float:
+        return round(k / max(n, 1), 6)
+
+    nbrs = defaultdict(dict)
+    for r in _partition_rows(base, "ml/item_similarity", cfg.ds):
+        s = Decimal(repr(r["cosine_sim"]))
+        nbrs[r["item_a"]][r["item_b"]] = nbrs[r["item_b"]][r["item_a"]] = s
+    owned = defaultdict(set)
+    for x, y in train:
+        owned[x].add(y)
+    eval_items = defaultdict(set)
+    for x, y in ev:
+        if x is not None:  # a null item is never recommended
+            eval_items[x].add(y)
+    per_user = []
+    for x, items in owned.items():
+        score = defaultdict(Decimal)
+        for y in items:
+            for c, s in nbrs[y].items():
+                score[c] += s
+        top = sorted((-s, c) for c, s in score.items() if c not in items and s > 0)
+        recs = {c for _, c in top[: cfg.top_n]}
+        if recs and x in eval_items:
+            per_user.append(len(recs & eval_items[x]) / cfg.top_n)
+    prec = 0.0
+    if per_user:
+        mean = Decimal(repr(sum(per_user) / len(per_user)))
+        prec = float(mean.quantize(Decimal("1e-6"), ROUND_HALF_UP))
+    return {
+        "eval_rows": float(n),
+        "user_coverage": frac(sum(x in train_users for x, _ in ev)),
+        "item_coverage": frac(sum(y in train_items for _, y in ev)),
+        "overall_coverage": frac(
+            sum(x in train_users and y in train_items for x, y in ev)
+        ),
+        "evaluated_users": float(len(per_user)),
+        "precision_at_k": prec,
+    }
+
+
+@pytest.mark.parametrize("run", ["pipeline_run", "dense_run"])
+def test_metrics_match_recomputation(spark, request, run):
+    """run_daily's returned and written metrics equal a plain-Python
+    recomputation over its written outputs."""
+    base, cfg, metrics = request.getfixturevalue(run)[:3]
+    expected = _recompute_metrics(base, cfg)
+    if run == "dense_run":  # the small fixture has no evaluated user
+        assert expected["evaluated_users"] > 0 and expected["precision_at_k"] > 0
+    # precision is a mean of doubles rounded to 6 dp: the summation
+    # order may differ from Spark's in the last bit
+    assert metrics["precision_at_k"] == pytest.approx(
+        expected.pop("precision_at_k"), abs=1e-6
+    )
+    assert {k: metrics[k] for k in expected} == expected
+    (row,) = spark.read.parquet(f"{base}/gold/ml/metrics").collect()
+    assert row.asDict() == {**metrics, "date": dt.date(2024, 3, 1)}
+
+
+def test_read_back_schemas_equal_inferred(spark, dense_run):
+    """Each read-back passes the schema just written, which must equal
+    what read_entity infers from the files, date type and nullability
+    included."""
+    base, cfg, _, reads = dense_run
+    assert [(kw["layer"], kw["entity"]) for kw, _ in reads] == [
+        ("bronze", "orders"),
+        ("silver", "orders"),
+        ("gold", "ml/train"),
+        ("gold", "ml/eval"),
+        ("gold", "ml/item_similarity"),
+    ]
+    for kw, supplied in reads:
+        assert kw["schema"] is not None
+        inferred = lake.read_entity(
+            spark, base=base, layer=kw["layer"], entity=kw["entity"], ds=cfg.ds
+        ).schema
+        assert supplied == inferred, kw["entity"]
+        assert supplied["date"].dataType == DateType()
+        assert all(f.nullable for f in supplied.fields)
+
+
+def test_run_range_with_empty_day(spark, tmp_path, pipeline_run):
+    """A backfill over a day with no extracted orders: that day writes
+    no data files, so the read-back must not need to infer a schema.
+    It completes with all-zero metrics, and the day with orders gets
+    the metrics a single-day run computes."""
+    _, _, metrics = pipeline_run
+    out = run_range(
+        spark, _source_orders(spark), str(tmp_path / "lake"),
+        ["2024-03-01", "2024-02-29"],
+    )
+    assert out["2024-02-29"] == dict.fromkeys(metrics, 0.0)
+    assert out["2024-03-01"] == metrics
