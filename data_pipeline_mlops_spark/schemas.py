@@ -109,6 +109,24 @@ EVAL_METRICS = T.StructType(
     ]
 )
 
+
+def nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` as a parquet read returns it: every field, array element
+    and map value nullable, nested ones included."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+    return dt
+
+
 __all__ = [
     "ORDERS",
     "CUSTOMERS",
@@ -118,4 +136,5 @@ __all__ = [
     "INTERACTION",
     "ITEM_SIMILARITY",
     "EVAL_METRICS",
+    "nullable",
 ]

@@ -13,14 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    DateType,
-    MapType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DateType, StructField, StructType
+
+from data_pipeline_mlops_spark.schemas import nullable
 
 
 def layer_path(base: str, layer: str, entity: str) -> str:
@@ -55,28 +50,13 @@ def write_partition(
     return path
 
 
-def _nullable(dt: DataType) -> DataType:
-    if isinstance(dt, StructType):
-        return StructType(
-            [
-                StructField(f.name, _nullable(f.dataType), True, f.metadata)
-                for f in dt.fields
-            ]
-        )
-    if isinstance(dt, ArrayType):
-        return ArrayType(_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
-    return dt
-
-
 def written_schema(df: DataFrame, partition_col: str = "date") -> StructType:
     """The schema :func:`read_entity` infers for a frame that
     :func:`write_partition` wrote with ``ds``: its columns, nested
     ones included, made nullable (a parquet read makes them so), then
     the ``YYYY-MM-DD`` partition column as a date."""
     return StructType(
-        [*_nullable(df.schema).fields, StructField(partition_col, DateType(), True)]
+        [*nullable(df.schema).fields, StructField(partition_col, DateType(), True)]
     )
 
 

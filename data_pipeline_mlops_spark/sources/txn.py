@@ -46,6 +46,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _TXN_DIR = "_txn"
 _DATA_DIR = "data"
@@ -344,6 +345,7 @@ class ManifestTable:
         version: int | None = None,
         partitions: list | None = None,
         merge_schema: bool = False,
+        schema: StructType | None = None,
     ) -> DataFrame:
         """Snapshot read. ``partitions`` prunes manifest-side (the scan
         never lists or opens other partitions' files — manifest-level
@@ -355,7 +357,12 @@ class ManifestTable:
         within each staged dir and the per-dir frames union by name
         with missing columns as nulls — Delta's additive schema
         evolution. Off by default: merging footers costs one extra
-        metadata pass and ordinary tables don't need it."""
+        metadata pass and ordinary tables don't need it.
+
+        ``schema`` skips inference, which runs a job
+        per staged dir that reads a parquet footer; pass it only when
+        it is exactly the schema inference would give, e.g.
+        ``schemas.nullable`` of the frame just committed."""
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed version at {self.path}")
@@ -385,7 +392,7 @@ class ManifestTable:
                 by_base.setdefault(base, []).append(d)
         pieces = []
         for base, dirs in sorted(by_base.items()):
-            r = spark.read
+            r = spark.read if schema is None else spark.read.schema(schema)
             if merge_schema:
                 r = r.option("mergeSchema", "true")
             if pcol is not None:

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_mlops_spark.functions import dedup_text
+from data_pipeline_mlops_spark.schemas import nullable
 from data_pipeline_mlops_spark.sources.txn import ManifestTable
 
 
@@ -163,9 +164,14 @@ def dedup_batch(
     )
     old_sigs = new_sigs
     if index.has_state():
+        # the index holds what earlier batches committed from frames
+        # built exactly like these, so their read-back schema is known
+        # and the footer-reading inference jobs are skipped
         hist = (
             nb.join(
-                index.bands.read(spark).select(
+                index.bands.read(
+                    spark, schema=nullable(new_bands.schema)
+                ).select(
                     F.col(id_col).alias("__old"), "band", "band_hash"
                 ),
                 ["band", "band_hash"],
@@ -173,7 +179,9 @@ def dedup_batch(
             .select("__new", "__old")
         )
         cands = cands.unionByName(hist)
-        old_sigs = new_sigs.unionByName(index.sigs.read(spark))
+        old_sigs = new_sigs.unionByName(
+            index.sigs.read(spark, schema=nullable(new_sigs.schema))
+        )
     cands = cands.distinct()
 
     agreement = F.round(

@@ -161,3 +161,24 @@ def test_bulk_seed_indexes_everything_including_near_dups(spark, index):
     verdicts = _decide(spark, index, [(10, BASE), (11, THIRD)], batch_id=1)
     assert verdicts[10][0] and verdicts[10][1] in (1, 2)
     assert not verdicts[11][0]
+
+
+def test_supplied_index_schema_equals_inferred(spark, index):
+    """dedup_batch reads the index with the nullable schema of the
+    frames it builds instead of inferring it; that schema must equal
+    the inferred one, nullability included, over 1 and 2 commits."""
+    from data_pipeline_mlops_spark.functions import dedup_text
+    from data_pipeline_mlops_spark.schemas import nullable
+
+    sigs = dedup_text.minhash_signatures(
+        _docs(spark, [(1, BASE)]), id_col="doc_id"
+    )
+    bands = dedup_text.banded_signatures(sigs, id_col="doc_id")
+    for batch_id, rows in [(1, [(1, BASE)]), (2, [(2, OTHER), (3, THIRD)])]:
+        _decide(spark, index, rows, batch_id)
+        for table, built in [(index.bands, bands), (index.sigs, sigs)]:
+            inferred = table.read(spark)
+            supplied = table.read(spark, schema=nullable(built.schema))
+            assert supplied.schema == inferred.schema
+            assert sorted(supplied.collect()) == sorted(inferred.collect())
+    assert index.sigs.read(spark).count() == 3

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_mlops_spark.functions import (
@@ -792,3 +793,133 @@ def test_skewfree_rank_tie_bucket_matches_direct_window(spark):
         ).collect()
     }
     assert got == direct
+
+
+# Reference builders: the column-by-column construction the SQL-string
+# builders in dedup_text replaced. Kept here so the equivalence tests
+# below pin the string-built plans to the same values and schema.
+def _ref_minhash_signatures(df, *, id_col, num_hashes, hash_method):
+    sh = dedup_text.shingle_rows(df, id_col=id_col, text_col="text", n=3)
+    if hash_method == "md5":
+        sh = sh.select(
+            "__id",
+            (dedup_text._md5_60(F.col("shingle")) % dedup_text.MINHASH_P)
+            .alias("__base"),
+        )
+        slots = [
+            F.min(
+                (F.lit(a) * F.col("__base") + F.lit(b)) % dedup_text.MINHASH_P
+            )
+            for a, b in dedup_text.minhash_coeffs(num_hashes)
+        ]
+    else:
+        slots = [
+            F.min(F.xxhash64(F.col("shingle"), F.lit(i)))
+            for i in range(num_hashes)
+        ]
+    mins = sh.groupBy("__id").agg(
+        *[s.alias(f"mh_{i}") for i, s in enumerate(slots)]
+    )
+    return mins.select(
+        F.col("__id").alias(id_col),
+        F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("signature"),
+    )
+
+
+def _ref_banded_signatures(sigs, *, id_col, bands, rows_per_band, hash_method):
+    def band_key(b):
+        elems = [
+            F.element_at("signature", b * rows_per_band + r + 1)
+            for r in range(rows_per_band)
+        ]
+        if hash_method == "md5":
+            return F.concat_ws(",", *[e.cast("string") for e in elems])
+        return F.xxhash64(F.lit(b), *elems).cast("string")
+
+    return sigs.select(
+        F.col(id_col),
+        F.posexplode(
+            F.array(*[band_key(b) for b in range(bands)])
+        ).alias("band", "band_hash"),
+    )
+
+
+def _ref_simhash(df, *, id_col, hash_method):
+    nbits = 60 if hash_method == "md5" else 63
+    tok = df.select(
+        F.col(id_col).alias("__id"),
+        F.explode(text.tokens("text")).alias("tok"),
+    ).withColumn(
+        "h",
+        dedup_text._md5_60(F.col("tok"))
+        if hash_method == "md5"
+        else F.xxhash64("tok"),
+    )
+    balances = tok.groupBy("__id").agg(
+        *[
+            F.sum(
+                F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1)
+                .otherwise(-1)
+            ).alias(f"b_{b}")
+            for b in range(nbits)
+        ]
+    )
+    fp = balances.select(
+        "__id",
+        sum(
+            [
+                F.when(F.col(f"b_{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
+                for b in range(nbits)
+            ]
+        ).cast("long").alias("simhash"),
+    )
+    return fp.select(F.col("__id").alias(id_col), "simhash")
+
+
+_EQUIV_DOCS = [
+    *DOCS,  # docs 1 and 2 are identical
+    (5, "too short"),  # fewer than 3 tokens: no shingle, no signature
+    (6, "the quick brown fox jumps over the lazy dog again and again"),
+]
+
+
+def _equiv_docs(spark):
+    # a hyphenated id column must be quoted in the SQL-string builders
+    return spark.createDataFrame(_EQUIV_DOCS, "`doc-id` long, text string")
+
+
+def _rows(df):
+    return df.schema, sorted(df.collect())
+
+
+@pytest.mark.parametrize("hash_method", ["xxhash64", "md5"])
+@pytest.mark.parametrize("num_hashes,bands", [(4, 1), (64, 1), (64, 16)])
+def test_minhash_builders_equal_column_built_reference(
+    spark, hash_method, num_hashes, bands
+):
+    docs = _equiv_docs(spark)
+    kw = dict(id_col="doc-id", num_hashes=num_hashes, hash_method=hash_method)
+    sigs = dedup_text.minhash_signatures(docs, **kw)
+    ref_sigs = _ref_minhash_signatures(docs, **kw)
+    schema, rows = _rows(sigs)
+    assert (schema, rows) == _rows(ref_sigs)
+    assert len(rows) == len(_EQUIV_DOCS) - 1  # the short doc has none
+    assert rows[0]["signature"] == rows[1]["signature"]  # docs 1 and 2
+
+    bkw = dict(
+        id_col="doc-id", bands=bands, rows_per_band=num_hashes // bands,
+        hash_method=hash_method,
+    )
+    banded = _rows(dedup_text.banded_signatures(sigs, **bkw))
+    assert banded == _rows(_ref_banded_signatures(ref_sigs, **bkw))
+    assert len(banded[1]) == bands * len(rows)
+
+
+@pytest.mark.parametrize("hash_method", ["xxhash64", "md5"])
+def test_simhash_equals_column_built_reference(spark, hash_method):
+    docs = _equiv_docs(spark)
+    kw = dict(id_col="doc-id", hash_method=hash_method)
+    got = _rows(dedup_text.simhash(docs, **kw))
+    assert got == _rows(_ref_simhash(docs, **kw))
+    fp = {r["doc-id"]: r["simhash"] for r in got[1]}
+    assert fp[1] == fp[2] and len(fp) == len(_EQUIV_DOCS)
