@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +53,10 @@ class QuerySpec:
     # all-pairs verify, exhaustive eval); scale_twin names the
     # registry query with the same semantics tier that IS the 100 TB
     # path. Labels are applied in _PARITY_ONLY below; a test asserts
-    # every False has an existing, scale-safe twin.
+    # every False has an existing, scale-safe twin. A twin that only
+    # adds a bound (basket, neighbor or stop-shingle cap) shares its
+    # builder and oracle generator with the parity query: both names
+    # register the same pair, the parity one with the bound set to None.
     scale_safe: bool = True
     scale_twin: str | None = None
 
@@ -626,45 +630,88 @@ WHERE value > 300
 # --------------------------------------------------------------------------
 
 
-def q_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _item_similarity(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    min_cooccurrence: int,
+    basket_cap: int | None,
+) -> DataFrame:
     """M6: sparse item-item cosine similarity via co-occurrence (exactly
     equal to dense cosine on binary vectors — SURVEY §7 hard part 3;
-    reference dags/daily_pipeline.py:391-398). min_cooccurrence=3 keeps
-    the surfaced pairs meaningful (full tail used internally by M7)."""
+    reference dags/daily_pipeline.py:391-398). Registered as
+    `item_similarity` (min_cooccurrence=3, uncapped: the parity tier)
+    and `item_similarity_basket_capped` (min_cooccurrence=2,
+    basket_cap=20: the scale tier). ``basket_cap`` truncates each
+    customer's basket by deterministic md5 rank BEFORE the self-join,
+    so a bot mega-basket contributes at most cap² pairs to the shuffle
+    instead of |basket|²; it bites at TPC-H scale (avg ~27 items per
+    customer at sf0.01), and the oracle replays the same ranking."""
     inter = _materialize(_interactions(spark, sf_dir))
     return cf.item_similarity(
         inter,
         user_col="customer_id",
         item_col="product_id",
-        min_cooccurrence=3,
+        min_cooccurrence=min_cooccurrence,
+        max_basket_size=basket_cap,
         # r14: the pair-count exchange shuffles ONE packed int64 key
         # instead of (item_a, item_b) — values bit-identical (pure
         # key encoding; product ids are < 2^32 at every TPC-H SF the
         # engine runs, and the expression raises on violation)
         pack_pair_keys=True,
-    ).select(
-        F.col("item_a"),
-        F.col("item_b"),
-        F.col("cooccurrence"),
-        F.col("cosine_sim"),
-    )
+    ).select("item_a", "item_b", "cooccurrence", "cosine_sim")
 
 
-ORACLE_ITEM_SIMILARITY = f"""
-WITH i AS ({ORACLE_INTERACTIONS}),
+def _sql_md5_cap(src: str, key: str, item: str, cap: int) -> str:
+    """SQL replay of cf.cap_basket_size: the first ``cap`` rows of each
+    ``key`` group of ``src``, ranked by (md5(item), item)."""
+    return f"""SELECT {key}, {item} FROM (
+    SELECT {key}, {item},
+           row_number() OVER (
+             PARTITION BY {key}
+             ORDER BY md5(CAST({item} AS VARCHAR)), {item}
+           ) AS br
+    FROM {src}
+  ) WHERE br <= {cap}"""
+
+
+def _sql_cf_sim(
+    min_cooccurrence: int = 1, basket_cap: int | None = None
+) -> str:
+    """The CTE prefix every item-CF oracle shares: interactions ``i``
+    (md5-rank basket-capped when ``basket_cap`` is set), item counts
+    ``cnt``, pair co-occurrence ``cooc`` and ``sim`` carrying
+    cf.item_similarity's 6-dp ``cosine_sim``."""
+    i = f"i AS ({ORACLE_INTERACTIONS})"
+    if basket_cap is not None:
+        i = f"""i0 AS ({ORACLE_INTERACTIONS}),
+i AS (
+  {_sql_md5_cap("i0", "customer_id", "product_id", basket_cap)}
+)"""
+    return f"""
+WITH {i},
 cnt AS (SELECT product_id, COUNT(*) AS c FROM i GROUP BY 1),
 cooc AS (
   SELECT a.product_id AS item_a, b.product_id AS item_b, COUNT(*) AS co
   FROM i a JOIN i b ON a.customer_id = b.customer_id
   WHERE a.product_id < b.product_id
   GROUP BY 1, 2
-  HAVING COUNT(*) >= 3
-)
-SELECT item_a, item_b, co AS cooccurrence,
-       ROUND(co / SQRT(ca.c * cb.c), 6) AS cosine_sim
-FROM cooc
-JOIN cnt ca ON ca.product_id = item_a
-JOIN cnt cb ON cb.product_id = item_b
+  HAVING COUNT(*) >= {min_cooccurrence}
+),
+sim AS (
+  SELECT item_a, item_b, co,
+         ROUND(co / SQRT(ca.c * cb.c), 6) AS cosine_sim
+  FROM cooc
+  JOIN cnt ca ON ca.product_id = item_a
+  JOIN cnt cb ON cb.product_id = item_b
+)"""
+
+
+def _item_similarity_oracle(
+    min_cooccurrence: int, basket_cap: int | None
+) -> str:
+    return _sql_cf_sim(min_cooccurrence, basket_cap) + """
+SELECT item_a, item_b, co AS cooccurrence, cosine_sim FROM sim
 """
 
 
@@ -744,21 +791,7 @@ def q_similar_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cf.similar_items(sim, item=1, top_n=10)
 
 
-ORACLE_SIMILAR_ITEMS = f"""
-WITH i AS ({ORACLE_INTERACTIONS}),
-cnt AS (SELECT product_id, COUNT(*) AS c FROM i GROUP BY 1),
-cooc AS (
-  SELECT a.product_id AS item_a, b.product_id AS item_b, COUNT(*) AS co
-  FROM i a JOIN i b ON a.customer_id = b.customer_id
-  WHERE a.product_id < b.product_id
-  GROUP BY 1, 2
-),
-sim AS (
-  SELECT item_a, item_b, ROUND(co / SQRT(ca.c * cb.c), 6) AS cosine_sim
-  FROM cooc
-  JOIN cnt ca ON ca.product_id = item_a
-  JOIN cnt cb ON cb.product_id = item_b
-),
+ORACLE_SIMILAR_ITEMS = _sql_cf_sim() + """,
 sym AS (
   SELECT item_a, item_b, cosine_sim FROM sim
   UNION ALL
@@ -772,19 +805,30 @@ LIMIT 10
 """
 
 
-def q_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _recommendations(
+    spark: SparkSession, sf_dir: str, *, max_neighbors: int | None
+) -> DataFrame:
     """M7: item-based CF recommendations, decimal-exact score
     accumulation, purchased masked via anti-join, per-user top-5
-    (reference dags/daily_pipeline.py:506-524). Scored for customers
-    with key <= 50 to bound the surfaced output.
+    (reference dags/daily_pipeline.py:506-524), scored for customers
+    with key <= 50 to bound the surfaced output. Registered as
+    `recommendations` (uncapped: the parity tier) and
+    `recommendations_capped` (max_neighbors=20: the scale tier).
+    ``max_neighbors`` keeps only each item's top-M similarity
+    neighbors for scoring, so the scoring join's fan-out is bounded by
+    |purchases| x M instead of |purchases| x full item degree (a hot
+    item's whole similarity row otherwise multiplies the shuffle). The
+    cap is a ROW_NUMBER() window, so the oracle replays it exactly.
 
     Round-13 optimization: the pair build is pruned to pairs TOUCHING
     the scored band's purchased items (cf.item_similarity
-    touching_items — pure pruning, surviving rows bit-identical, and
+    touching_items — pure pruning, surviving rows bit-identical:
     cf.recommend's small_user_band semi-join never reads an untouched
-    pair), and the materialized model drops the unused cooccurrence
+    pair, and the neighbor-cap window partitions by item_a, whose
+    partition is complete for every anchor item under the either-side
+    filter), and the materialized model drops the unused cooccurrence
     column — the pair shuffle and the checkpoint shrink to the
-    anchors' share of the fan-out. Same oracle, unchanged."""
+    anchors' share of the fan-out."""
     inter = _materialize(_interactions(spark, sf_dir))
     purchases = inter.where(F.col("customer_id") <= 50)
     sim = _materialize(
@@ -797,130 +841,33 @@ def q_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     recs = cf.recommend(
         purchases, sim, user_col="customer_id", item_col="product_id",
-        top_n=5, small_user_band=True,
+        top_n=5, max_neighbors=max_neighbors, small_user_band=True,
     )
-    return recs.select(
-        "customer_id",
-        F.col("product_id"),
-        "score",
-        F.col("rank"),
-    )
+    return recs.select("customer_id", "product_id", "score", "rank")
 
 
-ORACLE_RECOMMENDATIONS = f"""
-WITH i AS ({ORACLE_INTERACTIONS}),
-cnt AS (SELECT product_id, COUNT(*) AS c FROM i GROUP BY 1),
-cooc AS (
-  SELECT a.product_id AS item_a, b.product_id AS item_b, COUNT(*) AS co
-  FROM i a JOIN i b ON a.customer_id = b.customer_id
-  WHERE a.product_id < b.product_id
-  GROUP BY 1, 2
-),
-sim AS (
-  SELECT item_a, item_b,
-         CAST(ROUND(co / SQRT(ca.c * cb.c), 6) AS DECIMAL(18,6)) AS s
-  FROM cooc
-  JOIN cnt ca ON ca.product_id = item_a
-  JOIN cnt cb ON cb.product_id = item_b
-),
-sym AS (
-  SELECT item_a, item_b, s FROM sim
-  UNION ALL
-  SELECT item_b AS item_a, item_a AS item_b, s FROM sim
-),
-scored AS (
-  SELECT i.customer_id, sym.item_b AS product_id, SUM(sym.s) AS score_dec
-  FROM i JOIN sym ON i.product_id = sym.item_a
-  WHERE i.customer_id <= 50
-  GROUP BY 1, 2
-),
-masked AS (
-  SELECT s.customer_id, s.product_id, s.score_dec
-  FROM scored s
-  LEFT JOIN i ON i.customer_id = s.customer_id
-             AND i.product_id = s.product_id
-  WHERE i.customer_id IS NULL AND s.score_dec > 0
-),
-ranked AS (
-  SELECT customer_id, product_id,
-         CAST(score_dec AS DOUBLE) AS score,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY customer_id
-           ORDER BY score_dec DESC, product_id ASC) AS INTEGER) AS "rank"
-  FROM masked
-)
-SELECT customer_id, product_id, score, "rank" FROM ranked WHERE "rank" <= 5
-"""
-
-
-def q_recommendations_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M7 with the item-kNN neighbor cap exercised: only each item's
-    top-20 similarity neighbors participate in scoring. This is the
-    100 TB shape — the scoring join's fan-out is bounded by
-    |purchases| x 20 instead of |purchases| x full item degree (a hot
-    item's whole similarity row otherwise multiplies the shuffle).
-    The cap is SQL-expressible (ROW_NUMBER() <= 20 over the symmetric
-    similarity), so this approximation is fully oracle-checked.
-
-    Round-13 optimization: same touching-items pair-build prune +
-    cooccurrence-column drop as `recommendations` (pure pruning; the
-    neighbor-cap window partitions by item_a and every anchor item's
-    partition is complete under the either-side filter, so ranks are
-    identical). Same oracle, unchanged."""
-    inter = _materialize(_interactions(spark, sf_dir))
-    purchases = inter.where(F.col("customer_id") <= 50)
-    sim = _materialize(
-        cf.item_similarity(
-            inter, user_col="customer_id", item_col="product_id",
-            min_cooccurrence=1,
-            touching_items=purchases.select("product_id"),
-            pack_pair_keys=True,
-        ).select("item_a", "item_b", "cosine_sim")
-    )
-    recs = cf.recommend(
-        purchases, sim, user_col="customer_id", item_col="product_id",
-        top_n=5, max_neighbors=20, small_user_band=True,
-    )
-    return recs.select(
-        "customer_id",
-        F.col("product_id"),
-        "score",
-        F.col("rank"),
-    )
-
-
-ORACLE_RECOMMENDATIONS_CAPPED = f"""
-WITH i AS ({ORACLE_INTERACTIONS}),
-cnt AS (SELECT product_id, COUNT(*) AS c FROM i GROUP BY 1),
-cooc AS (
-  SELECT a.product_id AS item_a, b.product_id AS item_b, COUNT(*) AS co
-  FROM i a JOIN i b ON a.customer_id = b.customer_id
-  WHERE a.product_id < b.product_id
-  GROUP BY 1, 2
-),
-sim AS (
-  SELECT item_a, item_b,
-         CAST(ROUND(co / SQRT(ca.c * cb.c), 6) AS DECIMAL(18,6)) AS s
-  FROM cooc
-  JOIN cnt ca ON ca.product_id = item_a
-  JOIN cnt cb ON cb.product_id = item_b
-),
-sym AS (
-  SELECT item_a, item_b, s FROM sim
-  UNION ALL
-  SELECT item_b AS item_a, item_a AS item_b, s FROM sim
-),
+def _recommendations_oracle(max_neighbors: int | None) -> str:
+    nbrs, capped = "sym", ""
+    if max_neighbors is not None:
+        nbrs = "capped"
+        capped = f""",
 capped AS (
   SELECT item_a, item_b, s FROM (
     SELECT item_a, item_b, s,
            ROW_NUMBER() OVER (
              PARTITION BY item_a ORDER BY s DESC, item_b ASC) AS nr
     FROM sym)
-  WHERE nr <= 20
-),
+  WHERE nr <= {max_neighbors}
+)"""
+    return _sql_cf_sim() + f""",
+sym AS (
+  SELECT item_a, item_b, CAST(cosine_sim AS DECIMAL(18,6)) AS s FROM sim
+  UNION ALL
+  SELECT item_b, item_a, CAST(cosine_sim AS DECIMAL(18,6)) FROM sim
+){capped},
 scored AS (
-  SELECT i.customer_id, capped.item_b AS product_id, SUM(capped.s) AS score_dec
-  FROM i JOIN capped ON i.product_id = capped.item_a
+  SELECT i.customer_id, n.item_b AS product_id, SUM(n.s) AS score_dec
+  FROM i JOIN {nbrs} n ON i.product_id = n.item_a
   WHERE i.customer_id <= 50
   GROUP BY 1, 2
 ),
@@ -1511,82 +1458,53 @@ FROM documents
 """
 
 
-def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (word trigram shingles)."""
+def _ngram_jaccard(
+    spark: SparkSession, sf_dir: str, *, max_shingle_freq: int | None
+) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs (word trigram shingles).
+    Registered as `ngram_jaccard_dups` (uncapped: the parity tier) and
+    `ngram_jaccard_capped` (max_shingle_freq=50: the scale tier).
+    ``max_shingle_freq`` drops shingles occurring in more than that
+    many docs before the pair join, bounding its fan-out, which is
+    quadratic in per-shingle frequency; results differ only for pairs
+    glued solely by such boilerplate shingles. Set sizes stay uncapped
+    (true Jaccard denominators)."""
     return dedup_text.ngram_jaccard_pairs(
         _docs(spark, sf_dir),
         id_col="doc_id",
         text_col="text",
         n=3,
         threshold=0.05,
+        max_shingle_freq=max_shingle_freq,
     )
 
 
-ORACLE_NGRAM_JACCARD = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, UNNEST(list_distinct(
-    list_transform(range(1, len(toks) - 1),
-      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-  FROM t
-),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       ROUND(i / (sa.sz + sb.sz - i), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE ROUND(i / (sa.sz + sb.sz - i), 6) >= 0.05
-"""
-
-
-def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard with the stop-shingle cap applied
-    (max_shingle_freq=50): shingles occurring in more than 50 docs are
-    dropped before the pair join. This bounds the self-join fan-out —
-    quadratic in per-shingle frequency — which is what makes the exact
-    tier survive a 100x corpus; results differ from the uncapped tier
-    only for pairs glued solely by boilerplate shingles. Set sizes stay
-    uncapped (true Jaccard denominators)."""
-    return dedup_text.ngram_jaccard_pairs(
-        _docs(spark, sf_dir),
-        id_col="doc_id",
-        text_col="text",
-        n=3,
-        threshold=0.05,
-        max_shingle_freq=50,
-    )
-
-
-ORACLE_NGRAM_JACCARD_CAPPED = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, UNNEST(list_distinct(
-    list_transform(range(1, len(toks) - 1),
-      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-  FROM t
-),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1),
+def _ngram_jaccard_oracle(max_shingle_freq: int | None) -> str:
+    src, kept = "sh", ""
+    if max_shingle_freq is not None:
+        src = "kept"
+        kept = f"""
 freq AS (SELECT shingle, COUNT(*) AS f FROM sh GROUP BY 1),
 kept AS (
   SELECT sh.doc_id, sh.shingle FROM sh
   JOIN freq ON freq.shingle = sh.shingle
-  WHERE freq.f <= 50
+  WHERE freq.f <= {max_shingle_freq}
+),"""
+    return rf"""
+WITH t AS (
+  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+  FROM documents
 ),
+sh AS (
+  SELECT doc_id, UNNEST(list_distinct(
+    list_transform(range(1, len(toks) - 1),
+      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
+  FROM t
+),
+sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1),{kept}
 inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM {src} a JOIN {src} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
 SELECT id_a, id_b,
@@ -2050,20 +1968,28 @@ QUERIES: dict[str, QuerySpec] = {
     "eval_accumulate": QuerySpec(q_eval_accumulate, ORACLE_EVAL_ACCUMULATE),
     "repeat_customers": QuerySpec(q_repeat_customers, ORACLE_REPEAT_CUSTOMERS),
     "event_alerts": QuerySpec(q_event_alerts, ORACLE_EVENT_ALERTS),
-    "item_similarity": QuerySpec(q_item_similarity, ORACLE_ITEM_SIMILARITY),
+    "item_similarity": QuerySpec(
+        partial(_item_similarity, min_cooccurrence=3, basket_cap=None),
+        _item_similarity_oracle(min_cooccurrence=3, basket_cap=None),
+    ),
     "incremental_dedup_decisions": QuerySpec(
         q_incremental_dedup_decisions, ORACLE_INCREMENTAL_DEDUP
     ),
     "item_similarity_bucketed": QuerySpec(
-        q_item_similarity_bucketed, ORACLE_ITEM_SIMILARITY
+        q_item_similarity_bucketed,
+        _item_similarity_oracle(min_cooccurrence=3, basket_cap=None),
     ),
     "similar_items": QuerySpec(q_similar_items, ORACLE_SIMILAR_ITEMS),
-    "recommendations": QuerySpec(q_recommendations, ORACLE_RECOMMENDATIONS),
+    "recommendations": QuerySpec(
+        partial(_recommendations, max_neighbors=None),
+        _recommendations_oracle(max_neighbors=None),
+    ),
     "recommendations_capped": QuerySpec(
-        q_recommendations_capped, ORACLE_RECOMMENDATIONS_CAPPED
+        partial(_recommendations, max_neighbors=20),
+        _recommendations_oracle(max_neighbors=20),
     ),
     "recommendations_served": QuerySpec(
-        q_recommendations_served, ORACLE_RECOMMENDATIONS_CAPPED
+        q_recommendations_served, _recommendations_oracle(max_neighbors=20)
     ),
     # rows/schema-checked (no oracle): ALS solutions are not bit-stable
     # across partitionings; quality gated by the eval-harness band test
@@ -2092,9 +2018,13 @@ QUERIES: dict[str, QuerySpec] = {
     "doc_fingerprints": QuerySpec(
         q_doc_fingerprints, ORACLE_DOC_FINGERPRINTS
     ),
-    "ngram_jaccard_dups": QuerySpec(q_ngram_jaccard_dups, ORACLE_NGRAM_JACCARD),
+    "ngram_jaccard_dups": QuerySpec(
+        partial(_ngram_jaccard, max_shingle_freq=None),
+        _ngram_jaccard_oracle(None),
+    ),
     "ngram_jaccard_capped": QuerySpec(
-        q_ngram_jaccard_capped, ORACLE_NGRAM_JACCARD_CAPPED
+        partial(_ngram_jaccard, max_shingle_freq=50),
+        _ngram_jaccard_oracle(50),
     ),
     "embedding_norms": QuerySpec(q_embedding_norms, ORACLE_EMBEDDING_NORMS),
     "ann_cosine_topk": QuerySpec(q_ann_cosine_topk, ORACLE_ANN_COSINE_TOPK),
@@ -2821,7 +2751,7 @@ def q_doc_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DOC_DEDUP_DECISIONS = f"""
-WITH pairs AS ({ORACLE_NGRAM_JACCARD}),
+WITH pairs AS ({_ngram_jaccard_oracle(None)}),
 drops AS (SELECT DISTINCT id_b FROM pairs)
 SELECT d.doc_id, (dr.id_b IS NULL) AS keep
 FROM documents d LEFT JOIN drops dr ON dr.id_b = d.doc_id
@@ -3091,23 +3021,16 @@ QUERIES["error_context_events"] = QuerySpec(
 )
 
 
-def q_doc_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dup_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Near-dup CLUSTERS via distributed connected components
-    (functions/graph.py, hash-min label propagation) over the verified
-    n-gram Jaccard pairs: every document labeled with the min doc_id
+    (functions/graph.py, hash-min label propagation) over verified
+    near-dup pairs: every document labeled with the min doc_id
     reachable through near-dup edges (isolated docs label themselves),
-    plus cluster-exact survivorship (keep = is the cluster minimum).
-    The oracle computes the same closure with a recursive CTE — a
-    completely different evaluation strategy checking the iterative
-    DataFrame rounds."""
+    plus cluster-exact survivorship (keep = is the cluster minimum)."""
     from data_pipeline_mlops_spark.functions.graph import (
         connected_components,
     )
 
-    docs = _docs(spark, sf_dir)
-    pairs = dedup_text.ngram_jaccard_pairs(
-        docs, id_col="doc_id", text_col="text", n=3, threshold=0.05
-    )
     cc = connected_components(
         docs, pairs, vertex_col="doc_id", src_col="id_a", dst_col="id_b"
     )
@@ -3118,8 +3041,12 @@ def q_doc_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DOC_DUP_COMPONENTS = f"""
-WITH RECURSIVE pairs AS ({ORACLE_NGRAM_JACCARD}),
+def _components_oracle(pairs_sql: str) -> str:
+    """_dup_components' closure as a recursive CTE over ``pairs_sql`` —
+    a completely different evaluation strategy checking the iterative
+    DataFrame rounds."""
+    return f"""
+WITH RECURSIVE pairs AS ({pairs_sql}),
 sym AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION
@@ -3135,22 +3062,15 @@ SELECT v AS doc_id, MIN(label) AS component,
 FROM reach GROUP BY v
 """
 
-QUERIES["doc_dup_components"] = QuerySpec(
-    q_doc_dup_components, ORACLE_DOC_DUP_COMPONENTS
-)
 
-
-def q_doc_dup_components_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-path near-dup clustering: connected components over the
-    stop-shingle-CAPPED pair source (max_shingle_freq=50). The uncapped
-    twin (doc_dup_components) is the exact tier; this is the variant
-    whose pair join survives a 100x corpus — fan-out is quadratic in
-    per-shingle frequency, and the cap bounds it. Same recursive-CTE
-    oracle strategy, closed over the capped pair SQL."""
-    from data_pipeline_mlops_spark.functions.graph import (
-        connected_components,
-    )
-
+def _doc_dup_components(
+    spark: SparkSession, sf_dir: str, *, max_shingle_freq: int | None
+) -> DataFrame:
+    """Near-dup clusters over the exact n-gram Jaccard pairs (see
+    _ngram_jaccard). Registered as `doc_dup_components` (uncapped: the
+    parity tier) and `doc_dup_components_capped` (max_shingle_freq=50:
+    the scale tier, whose pair join survives a 100x corpus because the
+    stop-shingle cap bounds its per-shingle fan-out)."""
     docs = _docs(spark, sf_dir)
     pairs = dedup_text.ngram_jaccard_pairs(
         docs,
@@ -3158,37 +3078,19 @@ def q_doc_dup_components_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_col="text",
         n=3,
         threshold=0.05,
-        max_shingle_freq=50,
+        max_shingle_freq=max_shingle_freq,
     )
-    cc = connected_components(
-        docs, pairs, vertex_col="doc_id", src_col="id_a", dst_col="id_b"
-    )
-    return cc.select(
-        "doc_id",
-        "component",
-        (F.col("doc_id") == F.col("component")).alias("keep"),
-    )
+    return _dup_components(docs, pairs)
 
 
-ORACLE_DOC_DUP_COMPONENTS_CAPPED = f"""
-WITH RECURSIVE pairs AS ({ORACLE_NGRAM_JACCARD_CAPPED}),
-sym AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-reach(v, label) AS (
-  SELECT doc_id AS v, doc_id AS label FROM documents
-  UNION
-  SELECT s.a AS v, r.label FROM sym s JOIN reach r ON r.v = s.b
+QUERIES["doc_dup_components"] = QuerySpec(
+    partial(_doc_dup_components, max_shingle_freq=None),
+    _components_oracle(_ngram_jaccard_oracle(None)),
 )
-SELECT v AS doc_id, MIN(label) AS component,
-       (v = MIN(label)) AS keep
-FROM reach GROUP BY v
-"""
 
 QUERIES["doc_dup_components_capped"] = QuerySpec(
-    q_doc_dup_components_capped, ORACLE_DOC_DUP_COMPONENTS_CAPPED
+    partial(_doc_dup_components, max_shingle_freq=50),
+    _components_oracle(_ngram_jaccard_oracle(50)),
 )
 
 
@@ -3199,10 +3101,6 @@ def q_doc_dup_components_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded path — no all-pairs join anywhere. md5-portable hash so the
     oracle replays signatures bit-for-bit, then closes the pairs with
     the recursive CTE."""
-    from data_pipeline_mlops_spark.functions.graph import (
-        connected_components,
-    )
-
     docs = _docs(spark, sf_dir)
     pairs = dedup_text.minhash_dedup(
         docs,
@@ -3214,35 +3112,11 @@ def q_doc_dup_components_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         verify_threshold=0.05,
         hash_method="md5",
     )
-    cc = connected_components(
-        docs, pairs, vertex_col="doc_id", src_col="id_a", dst_col="id_b"
-    )
-    return cc.select(
-        "doc_id",
-        "component",
-        (F.col("doc_id") == F.col("component")).alias("keep"),
-    )
+    return _dup_components(docs, pairs)
 
-
-ORACLE_DOC_DUP_COMPONENTS_MINHASH = f"""
-WITH RECURSIVE pairs AS ({ORACLE_MINHASH_LSH}),
-sym AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-reach(v, label) AS (
-  SELECT doc_id AS v, doc_id AS label FROM documents
-  UNION
-  SELECT s.a AS v, r.label FROM sym s JOIN reach r ON r.v = s.b
-)
-SELECT v AS doc_id, MIN(label) AS component,
-       (v = MIN(label)) AS keep
-FROM reach GROUP BY v
-"""
 
 QUERIES["doc_dup_components_minhash"] = QuerySpec(
-    q_doc_dup_components_minhash, ORACLE_DOC_DUP_COMPONENTS_MINHASH
+    q_doc_dup_components_minhash, _components_oracle(ORACLE_MINHASH_LSH)
 )
 
 
@@ -6285,7 +6159,7 @@ WINDOW w AS (PARTITION BY c.component
 QUERIES["dup_cluster_keep_best"] = QuerySpec(
     q_dup_cluster_keep_best,
     ORACLE_DUP_CLUSTER_KEEP_BEST.format(
-        ngram_capped=ORACLE_NGRAM_JACCARD_CAPPED,
+        ngram_capped=_ngram_jaccard_oracle(50),
         doc_quality=ORACLE_DOC_QUALITY,
     ),
 )
@@ -6544,28 +6418,58 @@ QUERIES["doc_collocations"] = QuerySpec(
 )
 
 
-def q_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the item co-purchase graph (functions/graph.py::
-    pagerank): items are vertices, edges connect items bought in the
-    same order — 3 deterministic power iterations with decimal-exact
-    neighbor sums, so the DuckDB oracle replays every iteration
-    bit-for-bit (the second iterative-graph algorithm next to
-    connected components). PARITY-ONLY edge build: the co-purchase
-    self-join here is UNCAPPED — per-order pair fan-out is quadratic
-    in basket size (SCALING_r11 measured one 18,644-item hot basket
-    turning this same pair source into 183M rows) — the 100 TB path
-    is `item_pagerank_capped`, which truncates baskets with the CF
-    tier's md5-rank cap before the join."""
-    from data_pipeline_mlops_spark.functions.graph import pagerank
+# --------------------------------------------------------------------------
+# co-purchase source (graph trio + rule mining)
+# --------------------------------------------------------------------------
+# Items bought in the same order are co-purchased. Every consumer
+# builds its pairs via inter⋈inter on the order key, so per-order pair
+# fan-out is quadratic in basket size: SCALING_r11's hot-basket
+# artifact measured one 18,644-item basket turning this pair source
+# into 183M rows (95% from that basket alone). Each builder takes a
+# ``cap``: None is the uncapped parity tier; the registered scale twins
+# pass 5, which truncates each order's basket with the CF tier's
+# deterministic md5 rank (ml/cf.py::cap_basket_size — engine-portable,
+# so DuckDB replays the truncation bit-for-bit) BEFORE the self-join
+# exists, bounding every order's contribution at cap² pairs regardless
+# of upstream size. The cap deliberately bites at TPC-H scale
+# (lineitem orders run 1–7 items), so the oracles verify the
+# truncation itself, not just the downstream algorithm.
 
+
+def _copurchase_inter(
+    spark: SparkSession, sf_dir: str, cap: int | None
+) -> DataFrame:
+    """Distinct (order ``ok``, ``item``) rows; with ``cap`` set, each
+    order is truncated to ``cap`` items by md5 rank."""
     li = load_table(spark, sf_dir, "lineitem")
-    inter = _materialize(
-        li.select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_partkey").alias("item"),
-        ).distinct()
-    )
-    edges = (
+    inter = li.select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_partkey").alias("item"),
+    ).distinct()
+    if cap is not None:
+        inter = cf.cap_basket_size(
+            inter, basket_col="ok", item_col="item", max_items=cap
+        )
+    return _materialize(inter)
+
+
+def _sql_copurchase_inter(cap: int | None) -> str:
+    """The ``inter`` CTE replaying _copurchase_inter(cap)."""
+    if cap is None:
+        return """inter AS (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
+)"""
+    return f"""inter0 AS (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
+),
+inter AS MATERIALIZED (
+  {_sql_md5_cap("inter0", "ok", "item", cap)}
+)"""
+
+
+def _copurchase_edges(inter: DataFrame) -> DataFrame:
+    """Directed (src, dst) edges between distinct items of one order."""
+    return (
         inter.alias("a")
         .join(inter.alias("b"), "ok")
         .where(F.col("a.item") != F.col("b.item"))
@@ -6573,6 +6477,24 @@ def q_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.item").alias("src"), F.col("b.item").alias("dst")
         )
     )
+
+
+def _item_pagerank(
+    spark: SparkSession, sf_dir: str, *, cap: int | None
+) -> DataFrame:
+    """PageRank over the item co-purchase graph (functions/graph.py::
+    pagerank): items are vertices, edges connect items bought in the
+    same order — 3 deterministic power iterations with decimal-exact
+    neighbor sums, so the DuckDB oracle replays every iteration
+    bit-for-bit (the second iterative-graph algorithm next to
+    connected components). Registered as `item_pagerank` (uncapped:
+    the parity tier) and `item_pagerank_capped` (cap=5: the scale
+    tier); ``cap`` bounds each order's basket before the edge
+    self-join (see the co-purchase source note above)."""
+    from data_pipeline_mlops_spark.functions.graph import pagerank
+
+    inter = _copurchase_inter(spark, sf_dir, cap)
+    edges = _copurchase_edges(inter)
     verts = inter.select("item").distinct()
     pr = pagerank(
         verts, edges, vertex_col="item", src_col="src", dst_col="dst",
@@ -6582,24 +6504,17 @@ def q_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pagerank_oracle(
-    iters: int = 3, num: int = 17, den: int = 20, scale: int = 10**12,
-    inter_cte: str | None = None,
+    cap: int | None, iters: int = 3, num: int = 17, den: int = 20,
+    scale: int = 10**12,
 ) -> str:
     """Replays functions/graph.pagerank's exact BIGINT fixed-point
     recurrence (round-half-up integer division (2a+b)//(2b), damping
     as the rational num/den) — no double is ever rounded, so the two
     engines agree bit-for-bit at any SF (the earlier ROUND(double,10)
     form hit a one-ulp Spark/DuckDB half-boundary divergence at
-    sf0.1). ``inter_cte`` swaps the co-purchase vertex/edge source
-    (default: plain distinct (order, item)); the capped twin passes
-    the md5-rank basket-truncated variant so both tiers replay the
-    identical recurrence over their respective edge sets."""
-    if inter_cte is None:
-        inter_cte = """inter AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
-)"""
+    sf0.1) — over the co-purchase source for ``cap``."""
     parts = [f"""
-WITH {inter_cte},
+WITH {_sql_copurchase_inter(cap)},
 ed AS (
   SELECT DISTINCT a.item AS src, b.item AS dst
   FROM inter a JOIN inter b ON a.ok = b.ok AND a.item <> b.item
@@ -6640,7 +6555,9 @@ FROM pr{iters}"""
     return "".join(parts)
 
 
-QUERIES["item_pagerank"] = QuerySpec(q_item_pagerank, _pagerank_oracle())
+QUERIES["item_pagerank"] = QuerySpec(
+    partial(_item_pagerank, cap=None), _pagerank_oracle(cap=None)
+)
 
 
 def q_term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7323,34 +7240,23 @@ QUERIES["embedding_contrastive_pairs"] = QuerySpec(
 )
 
 
-def q_item_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _item_communities(
+    spark: SparkSession, sf_dir: str, *, cap: int | None
+) -> DataFrame:
     """Label-propagation communities over the item co-purchase graph
     (functions/graph.py::label_propagation, 3 synchronous rounds with
     a total argmax tiebreak — classic LPA's random tie-break made
     deterministic so DuckDB replays every round). The third iterative
     graph operator: components find reachability, PageRank finds
     centrality, LPA finds dense co-purchase communities. DISTINCT
-    edges so neighbor counts mean distinct neighbors. PARITY-ONLY
-    edge build (uncapped basket² self-join — see item_pagerank's
-    note); the 100 TB path is `item_communities_capped`."""
+    edges so neighbor counts mean distinct neighbors. Registered as
+    `item_communities` (uncapped: the parity tier) and
+    `item_communities_capped` (cap=5: the scale tier); ``cap`` bounds
+    each order's basket before the edge self-join."""
     from data_pipeline_mlops_spark.functions.graph import label_propagation
 
-    li = load_table(spark, sf_dir, "lineitem")
-    inter = _materialize(
-        li.select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_partkey").alias("item"),
-        ).distinct()
-    )
-    edges = (
-        inter.alias("a")
-        .join(inter.alias("b"), "ok")
-        .where(F.col("a.item") != F.col("b.item"))
-        .select(
-            F.col("a.item").alias("src"), F.col("b.item").alias("dst")
-        )
-        .distinct()
-    )
+    inter = _copurchase_inter(spark, sf_dir, cap)
+    edges = _copurchase_edges(inter).distinct()
     verts = inter.select("item").distinct()
     out = label_propagation(
         verts, edges, vertex_col="item", src_col="src", dst_col="dst",
@@ -7359,16 +7265,11 @@ def q_item_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("v").alias("item"), "label")
 
 
-def _communities_oracle(inter_cte: str | None = None) -> str:
+def _communities_oracle(cap: int | None) -> str:
     """LPA replay (3 unrolled synchronous rounds, total argmax
-    tiebreak) over a parameterized co-purchase source — the capped
-    twin passes the md5-rank basket-truncated inter CTE."""
-    if inter_cte is None:
-        inter_cte = """inter AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
-)"""
+    tiebreak) over the co-purchase source for ``cap``."""
     return f"""
-WITH {inter_cte},
+WITH {_sql_copurchase_inter(cap)},
 edges AS MATERIALIZED (
   SELECT DISTINCT a.item AS s, b.item AS d
   FROM inter a JOIN inter b ON a.ok = b.ok AND a.item <> b.item
@@ -7418,7 +7319,7 @@ FROM l2 LEFT JOIN r3 ON l2.v = r3.v
 
 
 QUERIES["item_communities"] = QuerySpec(
-    q_item_communities, _communities_oracle()
+    partial(_item_communities, cap=None), _communities_oracle(cap=None)
 )
 
 
@@ -8475,7 +8376,9 @@ QUERIES["orders_incremental_summary"] = QuerySpec(
 )
 
 
-def q_item_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _item_triangles(
+    spark: SparkSession, sf_dir: str, *, cap: int | None
+) -> DataFrame:
     """Triangle counting over the item co-purchase graph — the graph-
     density primitive (clustering-coefficient numerator) next to
     components/PageRank/LPA. Uses the DEGREE-ORIENTED formulation:
@@ -8486,19 +8389,12 @@ def q_item_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree, which is O(sqrt(m)) even for hub vertices — the
     standard trick that keeps the wedge join feasible at web scale
     (a hub's undirected degree would otherwise square). Emits per-item
-    triangle counts for the top-20 items by (count, id). NOTE the
-    orientation bounds the WEDGE join only — the edge BUILD in front
-    of it is the uncapped basket² self-join (parity-only; see
-    item_pagerank's note); the 100 TB path is
-    `item_triangles_capped`, which caps baskets before the join and
-    keeps the same oriented-wedge count."""
-    li = load_table(spark, sf_dir, "lineitem")
-    inter = _materialize(
-        li.select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_partkey").alias("item"),
-        ).distinct()
-    )
+    triangle counts for the top-20 items by (count, id). Registered as
+    `item_triangles` (uncapped: the parity tier) and
+    `item_triangles_capped` (cap=5: the scale tier). The orientation
+    bounds the WEDGE join only; ``cap`` bounds the edge BUILD in front
+    of it, so with the cap set both halves are bounded."""
+    inter = _copurchase_inter(spark, sf_dir, cap)
     und = (
         inter.alias("a")
         .join(inter.alias("b"), "ok")
@@ -8567,20 +8463,16 @@ def q_item_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _triangles_oracle(inter_cte: str | None = None) -> str:
-    """Degree-oriented triangle replay over a parameterized
-    co-purchase source. ``und``/``e`` carry AS MATERIALIZED hints
-    (the r11 linearization treatment, commit f129405's class): DuckDB
-    1.0 otherwise re-plans the oriented edge CTE into each of the
-    three wedge/closure join legs, re-running the basket self-join
-    three times — this replay was the slowest sf0.1 sweep row
-    (49.9 s) before the hints."""
-    if inter_cte is None:
-        inter_cte = """inter AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
-)"""
+def _triangles_oracle(cap: int | None) -> str:
+    """Degree-oriented triangle replay over the co-purchase source for
+    ``cap``. ``und``/``e`` carry AS MATERIALIZED hints (the r11
+    linearization treatment, commit f129405's class): DuckDB 1.0
+    otherwise re-plans the oriented edge CTE into each of the three
+    wedge/closure join legs, re-running the basket self-join three
+    times — this replay was the slowest sf0.1 sweep row (49.9 s)
+    before the hints."""
     return f"""
-WITH {inter_cte},
+WITH {_sql_copurchase_inter(cap)},
 und AS MATERIALIZED (
   SELECT DISTINCT a.item AS u, b.item AS v
   FROM inter a JOIN inter b ON a.ok = b.ok AND a.item < b.item
@@ -8617,7 +8509,9 @@ LIMIT 20
 """
 
 
-QUERIES["item_triangles"] = QuerySpec(q_item_triangles, _triangles_oracle())
+QUERIES["item_triangles"] = QuerySpec(
+    partial(_item_triangles, cap=None), _triangles_oracle(cap=None)
+)
 
 
 def q_dedup_tier_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9001,25 +8895,24 @@ QUERIES["embedding_drift"] = QuerySpec(
 )
 
 
-def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _association_rules(
+    spark: SparkSession, sf_dir: str, *, cap: int | None, min_support: int
+) -> DataFrame:
     """Market-basket association rules (support / confidence / lift)
     — the directional complement of the symmetric CF co-occurrence:
     rule a->b ranked by confidence = n(a,b)/n(a), lift =
     confidence / (n(b)/N). Counts are exact integers off the same
     basket self-join the CF tier uses; the emitted ratios are single
     divisions of integers rounded at 6 dp (deterministic IEEE).
-    min_support 5 prunes the rule space before the ratio math; top-50
-    by (confidence, lift, pair) via TakeOrdered."""
-    li = load_table(spark, sf_dir, "lineitem")
-    inter = _materialize(
-        li.select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_partkey").alias("item"),
-        ).distinct()
-    )
-    nb = inter.agg(
-        F.countDistinct("ok").cast("double").alias("__nb")
-    )
+    min_support prunes the rule space before the ratio math; top-50
+    by (confidence, lift, pair) via TakeOrdered. Registered as
+    `association_rules` (min_support=5, uncapped: the parity tier) and
+    `association_rules_capped` (cap=5, min_support=3: the scale tier);
+    ``cap`` truncates each order's basket by md5 rank, bounding the
+    pair shuffle at cap² per order regardless of upstream order
+    size."""
+    inter = _copurchase_inter(spark, sf_dir, cap)
+    nb = inter.agg(F.countDistinct("ok").cast("double").alias("__nb"))
     item_n = inter.groupBy("item").agg(
         F.count(F.lit(1)).cast("long").alias("n_item")
     )
@@ -9031,7 +8924,7 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.item").alias("ante"), F.col("b.item").alias("cons")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
-        .where(F.col("n_pair") >= 5)
+        .where(F.col("n_pair") >= min_support)
     )
     joined = (
         pair_n.join(
@@ -9060,10 +8953,9 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(50)
 
 
-ORACLE_ASSOCIATION_RULES = """
-WITH inter AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
-),
+def _association_rules_oracle(cap: int | None, min_support: int) -> str:
+    return f"""
+WITH {_sql_copurchase_inter(cap)},
 nb AS (SELECT CAST(COUNT(DISTINCT ok) AS DOUBLE) AS n_baskets FROM inter),
 item_n AS (
   SELECT item, CAST(COUNT(*) AS BIGINT) AS n_item FROM inter GROUP BY 1
@@ -9072,7 +8964,7 @@ pair_n AS (
   SELECT a.item AS ante, b.item AS cons, CAST(COUNT(*) AS BIGINT) AS n_pair
   FROM inter a JOIN inter b ON a.ok = b.ok AND a.item <> b.item
   GROUP BY 1, 2
-  HAVING COUNT(*) >= 5
+  HAVING COUNT(*) >= {min_support}
 )
 SELECT ante, cons, n_pair,
        ia.n_item AS n_ante, ic.n_item AS n_cons,
@@ -9088,8 +8980,10 @@ ORDER BY confidence DESC, lift DESC, ante ASC, cons ASC
 LIMIT 50
 """
 
+
 QUERIES["association_rules"] = QuerySpec(
-    q_association_rules, ORACLE_ASSOCIATION_RULES
+    partial(_association_rules, cap=None, min_support=5),
+    _association_rules_oracle(cap=None, min_support=5),
 )
 
 
@@ -9407,162 +9301,18 @@ QUERIES["event_seasonal_outliers"] = QuerySpec(
 
 
 # --------------------------------------------------------------------------
-# basket-size-capped variants (the in-operator bound for basket² fan-out)
+# basket-capped scale twins (builders shared with their parity twins
+# above; registered here to keep the registry order)
 # --------------------------------------------------------------------------
 
-
-def q_item_similarity_basket_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """M6 with max_basket_size=20: each customer's basket is truncated
-    to 20 items by deterministic md5 rank BEFORE the self-join, so a
-    bot mega-basket contributes at most 20² pairs to the shuffle
-    instead of |basket|². At TPC-H scale this truncates real baskets
-    (avg ~27 items per customer at sf0.01), so the oracle replays the
-    exact same md5 ranking."""
-    inter = _materialize(_interactions(spark, sf_dir))
-    return cf.item_similarity(
-        inter,
-        user_col="customer_id",
-        item_col="product_id",
-        min_cooccurrence=2,
-        max_basket_size=20,
-        pack_pair_keys=True,
-    ).select("item_a", "item_b", "cooccurrence", "cosine_sim")
-
-
-ORACLE_ITEM_SIMILARITY_BASKET_CAPPED = f"""
-WITH i0 AS ({ORACLE_INTERACTIONS}),
-i AS (
-  SELECT customer_id, product_id FROM (
-    SELECT customer_id, product_id,
-           row_number() OVER (
-             PARTITION BY customer_id
-             ORDER BY md5(CAST(product_id AS VARCHAR)), product_id
-           ) AS br
-    FROM i0
-  ) WHERE br <= 20
-),
-cnt AS (SELECT product_id, COUNT(*) AS c FROM i GROUP BY 1),
-cooc AS (
-  SELECT a.product_id AS item_a, b.product_id AS item_b,
-         CAST(COUNT(*) AS BIGINT) AS co
-  FROM i a JOIN i b ON a.customer_id = b.customer_id
-  WHERE a.product_id < b.product_id
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= 2
-)
-SELECT item_a, item_b, co AS cooccurrence,
-       ROUND(co / SQRT(ca.c * cb.c), 6) AS cosine_sim
-FROM cooc
-JOIN cnt ca ON ca.product_id = item_a
-JOIN cnt cb ON cb.product_id = item_b
-"""
-
 QUERIES["item_similarity_basket_capped"] = QuerySpec(
-    q_item_similarity_basket_capped, ORACLE_ITEM_SIMILARITY_BASKET_CAPPED
+    partial(_item_similarity, min_cooccurrence=2, basket_cap=20),
+    _item_similarity_oracle(min_cooccurrence=2, basket_cap=20),
 )
-
-
-def q_association_rules_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """association_rules with per-order baskets capped at 5 items
-    (md5-rank truncation) — bounds the pair shuffle at basket² ≤ 25
-    per order regardless of upstream order size."""
-    li = load_table(spark, sf_dir, "lineitem")
-    inter = _materialize(
-        cf.cap_basket_size(
-            li.select(
-                F.col("l_orderkey").alias("ok"),
-                F.col("l_partkey").alias("item"),
-            ).distinct(),
-            basket_col="ok",
-            item_col="item",
-            max_items=5,
-        )
-    )
-    nb = inter.agg(F.countDistinct("ok").cast("double").alias("__nb"))
-    item_n = inter.groupBy("item").agg(
-        F.count(F.lit(1)).cast("long").alias("n_item")
-    )
-    pair_n = (
-        inter.alias("a")
-        .join(inter.alias("b"), "ok")
-        .where(F.col("a.item") != F.col("b.item"))
-        .groupBy(
-            F.col("a.item").alias("ante"), F.col("b.item").alias("cons")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
-        .where(F.col("n_pair") >= 3)
-    )
-    joined = (
-        pair_n.join(
-            item_n.withColumnRenamed("item", "ante").withColumnRenamed(
-                "n_item", "n_ante"
-            ),
-            "ante",
-        )
-        .join(
-            item_n.withColumnRenamed("item", "cons").withColumnRenamed(
-                "n_item", "n_cons"
-            ),
-            "cons",
-        )
-    )
-    conf = F.col("n_pair").cast("double") / F.col("n_ante").cast("double")
-    lift = conf / (F.col("n_cons").cast("double") / F.col("__nb"))
-    out = joined.crossJoin(F.broadcast(nb)).select(
-        "ante", "cons", "n_pair", "n_ante", "n_cons",
-        F.round(conf, 6).alias("confidence"),
-        F.round(lift, 6).alias("lift"),
-    )
-    return out.orderBy(
-        F.col("confidence").desc(), F.col("lift").desc(),
-        F.col("ante").asc(), F.col("cons").asc(),
-    ).limit(50)
-
-
-ORACLE_ASSOCIATION_RULES_CAPPED = """
-WITH inter0 AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
-),
-inter AS (
-  SELECT ok, item FROM (
-    SELECT ok, item,
-           row_number() OVER (
-             PARTITION BY ok
-             ORDER BY md5(CAST(item AS VARCHAR)), item
-           ) AS br
-    FROM inter0
-  ) WHERE br <= 5
-),
-nb AS (SELECT CAST(COUNT(DISTINCT ok) AS DOUBLE) AS n_baskets FROM inter),
-item_n AS (
-  SELECT item, CAST(COUNT(*) AS BIGINT) AS n_item FROM inter GROUP BY 1
-),
-pair_n AS (
-  SELECT a.item AS ante, b.item AS cons, CAST(COUNT(*) AS BIGINT) AS n_pair
-  FROM inter a JOIN inter b ON a.ok = b.ok AND a.item <> b.item
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= 3
-)
-SELECT ante, cons, n_pair,
-       ia.n_item AS n_ante, ic.n_item AS n_cons,
-       ROUND(CAST(n_pair AS DOUBLE) / CAST(ia.n_item AS DOUBLE), 6)
-         AS confidence,
-       ROUND((CAST(n_pair AS DOUBLE) / CAST(ia.n_item AS DOUBLE))
-             / (CAST(ic.n_item AS DOUBLE) / nb.n_baskets), 6) AS lift
-FROM pair_n
-JOIN item_n ia ON ia.item = ante
-JOIN item_n ic ON ic.item = cons
-CROSS JOIN nb
-ORDER BY confidence DESC, lift DESC, ante ASC, cons ASC
-LIMIT 50
-"""
 
 QUERIES["association_rules_capped"] = QuerySpec(
-    q_association_rules_capped, ORACLE_ASSOCIATION_RULES_CAPPED
+    partial(_association_rules, cap=5, min_support=3),
+    _association_rules_oracle(cap=5, min_support=3),
 )
 
 
@@ -12757,201 +12507,20 @@ QUERIES["similar_items_als"] = QuerySpec(q_similar_items_als, None)
 
 
 # --------------------------------------------------------------------------
-# capped co-purchase graph tier (round 12) — the 100 TB path for the
-# graph trio (pagerank / communities / triangles)
+# capped co-purchase graph trio (builders shared with the parity trio
+# above; registered here to keep the registry order)
 # --------------------------------------------------------------------------
-# The uncapped trio builds edges via inter⋈inter on the order key:
-# per-order pair fan-out quadratic in basket size. SCALING_r11's
-# hot-basket artifact measured the hazard on this exact pair source —
-# one 18,644-item basket made it 183M rows (95% from that basket
-# alone). The capped twins truncate each order's basket to
-# _GRAPH_BASKET_CAP items with the CF tier's deterministic md5 rank
-# (ml/cf.py::cap_basket_size — engine-portable, so DuckDB replays the
-# truncation bit-for-bit) BEFORE the self-join exists, bounding every
-# order's contribution at cap² pairs regardless of upstream size.
-# The cap deliberately bites at TPC-H scale (lineitem orders run 1–7
-# items), so the oracles verify the truncation itself, not just the
-# downstream algorithm.
-
-_GRAPH_BASKET_CAP = 5
-
-_SQL_INTER_CAPPED = f"""inter0 AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem
-),
-inter AS MATERIALIZED (
-  SELECT ok, item FROM (
-    SELECT ok, item,
-           row_number() OVER (
-             PARTITION BY ok
-             ORDER BY md5(CAST(item AS VARCHAR)), item
-           ) AS br
-    FROM inter0
-  ) WHERE br <= {_GRAPH_BASKET_CAP}
-)"""
-
-
-def _copurchase_inter_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Shared capped co-purchase source: distinct (order, item) rows
-    with each order truncated to _GRAPH_BASKET_CAP items by md5 rank
-    — the single edge-builder bound all three capped graph twins (and
-    their oracles, via _SQL_INTER_CAPPED) share."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return _materialize(
-        cf.cap_basket_size(
-            li.select(
-                F.col("l_orderkey").alias("ok"),
-                F.col("l_partkey").alias("item"),
-            ).distinct(),
-            basket_col="ok",
-            item_col="item",
-            max_items=_GRAPH_BASKET_CAP,
-        )
-    )
-
-
-def q_item_pagerank_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """item_pagerank's scale twin: identical 3-iteration fixed-point
-    PageRank (functions/graph.py::pagerank) over basket-capped
-    co-purchase edges. The only difference from the parity tier is
-    the md5-rank basket truncation before the edge self-join — the
-    one defense that acts before the quadratic shuffle exists."""
-    from data_pipeline_mlops_spark.functions.graph import pagerank
-
-    inter = _copurchase_inter_capped(spark, sf_dir)
-    edges = (
-        inter.alias("a")
-        .join(inter.alias("b"), "ok")
-        .where(F.col("a.item") != F.col("b.item"))
-        .select(
-            F.col("a.item").alias("src"), F.col("b.item").alias("dst")
-        )
-    )
-    verts = inter.select("item").distinct()
-    pr = pagerank(
-        verts, edges, vertex_col="item", src_col="src", dst_col="dst",
-        iters=3,
-    )
-    return pr.select(F.col("v").alias("item"), "pr")
-
 
 QUERIES["item_pagerank_capped"] = QuerySpec(
-    q_item_pagerank_capped, _pagerank_oracle(inter_cte=_SQL_INTER_CAPPED)
+    partial(_item_pagerank, cap=5), _pagerank_oracle(cap=5)
 )
-
-
-def q_item_communities_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """item_communities' scale twin: identical 3-round deterministic
-    LPA (functions/graph.py::label_propagation) over basket-capped
-    co-purchase edges (md5-rank truncation before the self-join)."""
-    from data_pipeline_mlops_spark.functions.graph import label_propagation
-
-    inter = _copurchase_inter_capped(spark, sf_dir)
-    edges = (
-        inter.alias("a")
-        .join(inter.alias("b"), "ok")
-        .where(F.col("a.item") != F.col("b.item"))
-        .select(
-            F.col("a.item").alias("src"), F.col("b.item").alias("dst")
-        )
-        .distinct()
-    )
-    verts = inter.select("item").distinct()
-    out = label_propagation(
-        verts, edges, vertex_col="item", src_col="src", dst_col="dst",
-        iters=3,
-    )
-    return out.select(F.col("v").alias("item"), "label")
-
 
 QUERIES["item_communities_capped"] = QuerySpec(
-    q_item_communities_capped, _communities_oracle(_SQL_INTER_CAPPED)
+    partial(_item_communities, cap=5), _communities_oracle(cap=5)
 )
 
-
-def q_item_triangles_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """item_triangles' scale twin: identical degree-oriented wedge
-    count over basket-capped co-purchase edges — with the cap in
-    front, BOTH halves are bounded (edge build by cap² per order,
-    wedge join by oriented out-degree)."""
-    inter = _copurchase_inter_capped(spark, sf_dir)
-    und = (
-        inter.alias("a")
-        .join(inter.alias("b"), "ok")
-        .where(F.col("a.item") < F.col("b.item"))
-        .select(
-            F.col("a.item").alias("u"), F.col("b.item").alias("v")
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("x"))
-        .unionAll(und.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    e = (
-        und.join(
-            F.broadcast(
-                deg.withColumnRenamed("x", "u").withColumnRenamed("d", "du")
-            ),
-            "u",
-        )
-        .join(
-            F.broadcast(
-                deg.withColumnRenamed("x", "v").withColumnRenamed("d", "dv")
-            ),
-            "v",
-        )
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-            )
-            .otherwise(
-                F.struct(F.col("v").alias("s"), F.col("u").alias("t"))
-            )
-            .alias("o")
-        )
-        .select(F.col("o.s").alias("s"), F.col("o.t").alias("t"))
-    )
-    e = _materialize(e)
-    wedge = (
-        e.alias("e1")
-        .join(e.alias("e2"), F.col("e1.s") == F.col("e2.s"))
-        .where(F.col("e1.t") < F.col("e2.t"))
-        .select(
-            F.col("e1.s").alias("a"),
-            F.col("e1.t").alias("b"),
-            F.col("e2.t").alias("c"),
-        )
-    )
-    closer = e.select(F.col("s").alias("b"), F.col("t").alias("c"))
-    tri = wedge.join(closer, ["b", "c"])
-    per_item = (
-        tri.select(F.col("a").alias("item"))
-        .unionAll(tri.select(F.col("b").alias("item")))
-        .unionAll(tri.select(F.col("c").alias("item")))
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    return (
-        per_item.orderBy(
-            F.col("n_triangles").desc(), F.col("item").asc()
-        ).limit(20)
-    )
-
-
 QUERIES["item_triangles_capped"] = QuerySpec(
-    q_item_triangles_capped, _triangles_oracle(_SQL_INTER_CAPPED)
+    partial(_item_triangles, cap=5), _triangles_oracle(cap=5)
 )
 
 
@@ -13482,6 +13051,12 @@ QUERIES["doc_ccnet_buckets"] = QuerySpec(
 # data-dependent way, and each has a registered scale-safe twin that is
 # the 100 TB path. The labels make the hazard machine-readable
 # (plans/diagnose.scale_safe_twin) instead of re-litigated per round.
+# Where the twin only adds a cap (item_similarity, recommendations,
+# ngram_jaccard_dups, doc_dup_components, the co-purchase trio and
+# association_rules), both names register one shared builder and
+# oracle generator, the parity name with the cap set to None. The
+# embedding, ANN, hybrid-search, SemDeDup and LTTB twins use different
+# algorithms, so they keep separate builders.
 _PARITY_ONLY: dict[str, str] = {
     # uncapped min_cooccurrence CF build: user-keyed self-join fans out
     # quadratically in basket size (one bot mega-basket dominates)

@@ -87,3 +87,46 @@ def test_scale_labels_every_parity_query_has_safe_twin():
         }
     # and a safe query reports itself safe
     assert scale_safe_twin("recommendations_capped")["scale_safe"]
+
+
+def test_cap_twins_bound_changes_oracle_rows():
+    """Each cap twin registers the same oracle generator as its parity
+    twin, with only the bound changed. If a shared generator dropped
+    the bound, the Spark side and the oracle would still agree and the
+    oracle sweep would stay green; this test fails instead. Each capped
+    oracle is compared with its own generator at bound None (other
+    parameters, such as min support, held at the capped values), so
+    only the bound is under test. DuckDB only, at sf0.001.
+
+    The text pairs (ngram_jaccard_*, doc_dup_components_*) and the
+    communities pair are left out: their caps do not change the rows
+    at sf0.001 (the largest trigram document frequency there is 9,
+    under the cap of 50). test_functions.py's planted
+    test_stop_shingle_cap_drops_boilerplate_pairs covers the text cap."""
+    from data_pipeline_mlops_spark import registry as reg
+    from tests.oracle_compare import duckdb_conn
+
+    cap_off = {
+        "item_similarity_basket_capped": reg._item_similarity_oracle(
+            min_cooccurrence=2, basket_cap=None
+        ),
+        "recommendations_capped": reg._recommendations_oracle(
+            max_neighbors=None
+        ),
+        "item_pagerank_capped": reg._pagerank_oracle(cap=None),
+        "item_triangles_capped": reg._triangles_oracle(cap=None),
+        "association_rules_capped": reg._association_rules_oracle(
+            cap=None, min_support=3
+        ),
+    }
+    con = duckdb_conn(SF_SMALL)
+
+    def rows(sql):
+        return sorted(map(repr, con.sql(sql).fetchall()))
+
+    unchanged = [
+        name
+        for name, sql in cap_off.items()
+        if rows(reg.QUERIES[name].oracle) == rows(sql)
+    ]
+    assert not unchanged, f"cap no longer changes the rows: {unchanged}"

@@ -44,6 +44,77 @@ def test_ngram_jaccard_near_dups(spark):
     assert not any(4 in p for p in pairs)  # unrelated doc pairs with none
 
 
+# "lorem ipsum dolor" is boilerplate in 4 docs, above the cap of 3;
+# "mu nu xi" is in exactly 3, so it stays. 10-11 share only the
+# boilerplate; 10-12 share it plus 3 more trigrams.
+CAPPED_DOCS = [
+    (10, "lorem ipsum dolor alpha beta gamma"),
+    (11, "lorem ipsum dolor delta epsilon zeta"),
+    (12, "lorem ipsum dolor alpha beta gamma eta"),
+    (13, "lorem ipsum dolor theta iota kappa"),
+    (14, "mu nu xi omicron"),
+    (15, "mu nu xi omicron pi"),
+    (16, "mu nu xi rho"),
+]
+
+
+def _reference_overlaps(docs, cap):
+    """Plain-Python (id_a, id_b) -> (inter, sz_a, sz_b): intersections
+    over the shingles kept by the cap, set sizes over all shingles."""
+    from collections import Counter
+    from itertools import combinations
+
+    sh = {}
+    for doc_id, body in docs:
+        toks = body.split()
+        sh[doc_id] = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    freq = Counter(s for ss in sh.values() for s in ss)
+    kept = {
+        d: {s for s in ss if cap is None or freq[s] <= cap}
+        for d, ss in sh.items()
+    }
+    out = {}
+    for a, b in combinations(sorted(sh), 2):
+        inter = len(kept[a] & kept[b])
+        if inter:
+            out[(a, b)] = (inter, len(sh[a]), len(sh[b]))
+    return out
+
+
+def test_stop_shingle_cap_drops_boilerplate_pairs(spark):
+    docs = spark.createDataFrame(CAPPED_DOCS, "doc_id long, text string")
+    for cap in (3, None):
+        ref = _reference_overlaps(CAPPED_DOCS, cap)
+        jaccard = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in dedup_text.ngram_jaccard_pairs(
+                docs, id_col="doc_id", n=3, threshold=0.0,
+                max_shingle_freq=cap,
+            ).collect()
+        }
+        assert jaccard == {
+            p: round(i / (sa + sb - i), 6) for p, (i, sa, sb) in ref.items()
+        }
+        contained = {
+            (r["id_a"], r["id_b"]): (r["inter"], r["sz_a"], r["sz_b"])
+            for r in dedup_text.containment_pairs(
+                docs, id_col="doc_id", n=3, threshold_pct=0,
+                max_shingle_freq=cap,
+            ).collect()
+        }
+        assert contained == ref
+        if cap is None:
+            assert jaccard[(10, 11)] == round(1 / 7, 6)
+            assert jaccard[(10, 12)] == 0.8
+        else:
+            # joined only by the boilerplate trigram: gone under the cap
+            assert (10, 11) not in jaccard and (10, 11) not in contained
+            # kept-shingle intersection (3) over full set sizes (4, 5)
+            assert jaccard[(10, 12)] == 0.5
+            # a trigram exactly at the cap is kept
+            assert jaccard[(14, 16)] == round(1 / 3, 6)
+
+
 def test_minhash_lsh_finds_exact_and_near_dups(spark):
     cands = {
         (r["id_a"], r["id_b"])
