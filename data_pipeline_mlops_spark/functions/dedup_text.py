@@ -157,8 +157,7 @@ def _hashed_shingle_base(
             "__id",
             F.size("__sh").alias("__sz"),
             F.transform("__sh", lambda c: F.xxhash64(c)).alias("__shh"),
-        ),
-        corpus_sized=True,  # shingle arrays are payload-proportional
+        )
     )
 
 
@@ -428,8 +427,7 @@ def minhash_dedup(
     # non-materialized aliased array is the measured-25x-slower plan).
     if verify_threshold is not None:
         base = materialize(
-            shingled(df, id_col=id_col, text_col=text_col, n=shingle_n),
-            corpus_sized=True,  # string shingle arrays ~ text bytes
+            shingled(df, id_col=id_col, text_col=text_col, n=shingle_n)
         )
         sh = base.select("__id", F.explode("__sh").alias("shingle"))
     else:

@@ -128,11 +128,11 @@ def auto_lsh_params(
     embedding_near_dups_fast 0.77) while everything else sat <= 0.40.
     With occupancy pinned, candidate pairs grow ~n * occupancy *
     tables ~ n log n instead of n^2 / 2^b. The default occupancy 8 is
-    deliberately tight: with Arrow-matmul bucketing (see
-    hyperplane_buckets_all_tables) extra planes are nearly free, and
-    candidate volume — which the exact-cosine rescore pays for — is
-    the real cost (measured at the 25x fixture: occupancy 64 produced
-    18.5M candidates for 5k true pairs).
+    deliberately tight: hyperplane_buckets_all_tables computes every
+    plane of every table in one Arrow matmul, so extra planes are
+    nearly free, and candidate volume — which the exact-cosine rescore
+    pays for — is the real cost (measured at the 25x fixture: occupancy
+    64 produced 18.5M candidates for 5k true pairs).
 
     Why tables = planes keeps recall flat: a pair at collision
     probability p per plane is missed with probability
@@ -158,188 +158,12 @@ def auto_lsh_params(
 def _md5_component(key: str) -> int:
     """One hyperplane component in [-1000, 1000] from md5 — the EXACT
     integer any engine derives from the same key string:
-    int(md5_hex[:15], 16) % 2001 - 1000 equals Spark's
-    pmod(conv(substring(md5(key),1,15),16,10), 2001) - 1000 and
-    DuckDB's (('0x'||substring(md5(key),1,15))::BIGINT % 2001) - 1000
+    int(md5_hex[:15], 16) % 2001 - 1000 equals DuckDB's
+    (('0x'||substring(md5(key),1,15))::BIGINT % 2001) - 1000
     (60-bit value, never negative, so % == pmod)."""
     import hashlib
 
     return int(hashlib.md5(key.encode()).hexdigest()[:15], 16) % 2001 - 1000
-
-
-def hyperplane_lsh_buckets(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    num_planes: int = 16,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Scale path: random-hyperplane LSH — bucket = sign bits of
-    `num_planes` pseudo-random projections. Near vectors collide with
-    high probability; ANN search joins query buckets to corpus buckets
-    instead of cross-joining.
-
-    ``dim`` given (the hot path): hyperplane components are
-    PRECOMPUTED on the driver (seeded md5 of "x,seed,plane,i") and
-    inlined as literal arrays — the executors do pure multiply-add,
-    ZERO per-row hash calls. The components are a few KB of plan
-    literals at any realistic (planes, dim), fine to ship to 1000
-    executors. This removed the dominant bucketing cost SCALING_r13's
-    pre-artifact measured: with per-row hashing, planes^2 * dim hash
-    evaluations per vector made the 5x->25x step exponent ~1.0 once
-    the corpus-scaled knob grew the plane count.
-
-    ``dim=None``: components derived per-row from xxhash64(plane, i,
-    seed) — dimension-agnostic fallback for ragged/unknown-width
-    vectors (pmod, not %: xxhash64 is signed and % would bias the
-    hyperplanes negative).
-
-    The double-cast vector is materialized ONCE in a prior projection —
-    each of the num_planes projections references it, and inline HOF
-    expressions re-evaluate per reference (see dedup_text)."""
-    df = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _to_double(F.col(vec_col)).alias("__v"),
-    )
-    v = F.col("__v")
-
-    if dim is not None:
-        comps = [
-            [
-                _md5_component(f"x,{seed},{p},{i}") / 1000.0
-                for i in range(dim)
-            ]
-            for p in range(num_planes)
-        ]
-
-        def projection(p: int) -> Column:
-            # literal weights + HOF fold — see hyperplane_buckets_md5
-            # for why NOT an expanded getItem sum
-            w = F.array(*[F.lit(c) for c in comps[p]])
-            return F.aggregate(
-                F.zip_with(v, w, lambda x, c: x * c),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-    else:
-
-        def plane_component(p: int, i: Column) -> Column:
-            h = F.xxhash64(F.lit(p), i, F.lit(seed))
-            return (F.pmod(h, F.lit(2001)) - 1000).cast("double") / 1000.0
-
-        def projection(p: int) -> Column:
-            idx = F.sequence(F.lit(0), F.size(v) - 1)
-            prods = F.zip_with(
-                v,
-                F.transform(idx, lambda i: plane_component(p, i)),
-                lambda x, w: x * w,
-            )
-            return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-    bucket = sum(
-        [
-            F.when(projection(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            for p in range(num_planes)
-        ]
-    )
-    return df.select(
-        F.col(id_col), F.col(vec_col), bucket.cast("long").alias("bucket")
-    )
-
-
-def hyperplane_buckets_md5(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    num_planes: int,
-    table: int,
-    dim: int | None = 64,
-) -> DataFrame:
-    """Engine-portable hyperplane LSH bucketing (oracle twin of
-    hyperplane_lsh_buckets). Two determinism moves so DuckDB reproduces
-    buckets bit-for-bit:
-
-    1. vectors are quantized to integers (floor(x*1e6 + 0.5) after the
-       double cast) — the sign of each projection is then EXACT int64
-       arithmetic, immune to fold-order/precision differences;
-    2. plane components are pmod(md5_60("t,p,i"), 2001) - 1000 — any
-       engine generates identical planes from the key string alone.
-
-    With ``dim`` given (the hot path), the components are computed
-    ONCE on the driver (hashlib.md5 — _md5_component proves the
-    value-identity with the SQL derivation) and inlined as literal
-    arrays: executors do pure integer multiply-add, zero per-row hash
-    calls, and the DuckDB oracle still reproduces the identical
-    buckets because the VALUES are the same md5-derived integers.
-    ``dim=None`` falls back to per-row Spark-md5 component derivation
-    for unknown-width vectors.
-
-    Output: (id, vec, bucket) for one table; OR-construction unions
-    tables (see lsh_topk method="md5")."""
-    df = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.transform(
-            _to_double(F.col(vec_col)),
-            lambda x: F.floor(x * 1000000.0 + 0.5).cast("long"),
-        ).alias("__vi"),
-    )
-    vi = F.col("__vi")
-
-    if dim is not None:
-        comps = [
-            [_md5_component(f"{table},{p},{i}") for i in range(dim)]
-            for p in range(num_planes)
-        ]
-
-        def projection(p: int) -> Column:
-            # literal weight array + one zip_with/aggregate fold per
-            # plane. Measured alternative at the 25x leg: expanding
-            # to explicit getItem*literal sums (planes x dim expr
-            # nodes) ballooned task binaries to ~8 MiB and ran ~3x
-            # SLOWER than the interpreted fold — plan size beats
-            # interpretation overhead here; don't "optimize" back.
-            w = F.array(*[F.lit(c).cast("long") for c in comps[p]])
-            return F.aggregate(
-                F.zip_with(vi, w, lambda x, c: x * c),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-
-    else:
-
-        def component(p: int, i: Column) -> Column:
-            key = F.concat_ws(
-                ",", F.lit(str(table)), F.lit(str(p)), i.cast("string")
-            )
-            h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
-            return F.pmod(h, F.lit(2001)) - 1000
-
-        def projection(p: int) -> Column:
-            idx = F.sequence(F.lit(0), F.size(vi) - 1)
-            prods = F.zip_with(
-                vi,
-                F.transform(idx, lambda i: component(p, i)),
-                lambda x, w: x * w,
-            )
-            return F.aggregate(
-                prods, F.lit(0).cast("long"), lambda acc, x: acc + x
-            )
-
-    bucket = sum(
-        [
-            F.when(projection(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            for p in range(num_planes)
-        ]
-    )
-    return df.select(
-        F.col(id_col), F.col(vec_col), bucket.cast("long").alias("bucket")
-    )
 
 
 def hyperplane_buckets_all_tables(
@@ -353,10 +177,18 @@ def hyperplane_buckets_all_tables(
     method: str = "md5",
     seed: int = 42,
 ) -> DataFrame:
-    """ALL tables' buckets in ONE Arrow-vectorized pass: a pandas UDF
-    computes the (rows x dim) @ (dim x planes*tables) projection
-    matmul in numpy and packs sign bits per table; posexplode emits
-    (id, table, bucket).
+    """Random-hyperplane LSH: bucket = sign bits of ``num_planes``
+    projections, for each of ``num_tables`` independent plane sets.
+    Near vectors collide with high probability, so ANN search and
+    near-dup detection join on (table, bucket) instead of
+    cross-joining. ALL tables' buckets come out of ONE Arrow-vectorized
+    pass: a pandas UDF computes the (rows x dim) @ (dim x
+    planes*tables) projection matmul in numpy and packs sign bits per
+    table; posexplode emits (id, table, bucket).
+
+    Every vector must be ``dim`` wide: the plane components are
+    computed ONCE on the driver (a few KB at any realistic planes x
+    dim) and the matmul raises on any other width.
 
     Why a UDF here, in a repo that bans hot-path UDFs: the per-plane
     fold is a genuine matmul, which no built-in vectorized expression
@@ -365,12 +197,11 @@ def hyperplane_buckets_all_tables(
     steps per vector were the single largest cost of the near-dup
     tier (11.3 s of a 20 s run; this pass measures <1 s). Arrow
     batching + numpy is the sanctioned fast path for exactly this
-    shape. The per-table builders (hyperplane_buckets_md5 /
-    hyperplane_lsh_buckets) remain the pure-JVM form.
+    shape.
 
     ORACLE-EXACT for method="md5": vectors quantize to int64
     (floor(x*1e6+0.5) — float32->float64 cast, multiply, +0.5, floor
-    are the identical IEEE ops Spark's expression form performs) and
+    are the identical IEEE ops the oracle's SQL performs) and
     the projection is an int64 matmul — integer addition is
     associative, so numpy's summation order CANNOT change the result:
     DuckDB replays the same buckets bit-for-bit. The components are
@@ -440,15 +271,13 @@ def lsh_topk(
     vec_col: str,
     k: int = 5,
     num_planes: int = 12,
-    seed: int = 42,
     num_tables: int = 1,
-    method: str = "xxhash64",
-    dim: int | None = 64,
+    dim: int = 64,
 ) -> DataFrame:
-    """ANN top-k: bucket both sides, join on bucket, exact-rescore the
-    candidates, dedupe across tables. ``dim`` (vector width) enables
-    the driver-inlined literal hyperplane components — pass None for
-    unknown-width vectors (per-row hash fallback).
+    """ANN top-k: bucket both sides on the md5 hyperplanes
+    (hyperplane_buckets_all_tables, so DuckDB replays the buckets),
+    join on bucket, exact-rescore the candidates, dedupe across tables.
+    ``dim`` is the vector width.
 
     Standard (k planes, L tables) OR-construction: a pair is a
     candidate if it collides in ANY of `num_tables` independent
@@ -458,47 +287,19 @@ def lsh_topk(
     expensive (no structure to hash).
 
     Plan shape (round-13 rebuild, same treatment as
-    cosine_near_dup_pairs): with ``dim`` given, both sides bucket in
-    ONE Arrow matmul pass (hyperplane_buckets_all_tables) and the
-    bucket join + cross-table dedup move BARE (query_id, neighbor_id)
-    pairs — the corpus vectors never ride the candidate shuffle; they
-    re-join once per distinct candidate for the exact rescore. At
-    corpus scale the old shape shipped num_tables full-vector copies
-    of the corpus through the join."""
+    cosine_near_dup_pairs): both sides bucket in ONE Arrow matmul pass
+    and the bucket join + cross-table dedup move BARE (query_id,
+    neighbor_id) pairs — the corpus vectors never ride the candidate
+    shuffle; they re-join once per distinct candidate for the exact
+    rescore. At corpus scale the old shape shipped num_tables
+    full-vector copies of the corpus through the join."""
     from pyspark.sql import Window
 
-    def one_table(df: DataFrame, t: int) -> DataFrame:
-        if method == "md5":
-            return hyperplane_buckets_md5(
-                df, id_col=id_col, vec_col=vec_col,
-                num_planes=num_planes, table=t, dim=dim,
-            )
-        return hyperplane_lsh_buckets(
-            df, id_col=id_col, vec_col=vec_col,
-            num_planes=num_planes, seed=seed + 7919 * t, dim=dim,
-        )
-
     def bucketed(df: DataFrame, out_id: str) -> DataFrame:
-        if dim is not None:
-            return hyperplane_buckets_all_tables(
-                df, id_col=id_col, vec_col=vec_col,
-                num_planes=num_planes, num_tables=num_tables,
-                dim=dim,
-                method="md5" if method == "md5" else "seeded",
-                seed=seed,
-            ).select(F.col(id_col).alias(out_id), "table", "bucket")
-        tables = [
-            one_table(df, t).select(
-                F.col(id_col).alias(out_id),
-                F.lit(t).alias("table"),
-                "bucket",
-            )
-            for t in range(num_tables)
-        ]
-        out = tables[0]
-        for t in tables[1:]:
-            out = out.unionByName(t)
-        return out
+        return hyperplane_buckets_all_tables(
+            df, id_col=id_col, vec_col=vec_col,
+            num_planes=num_planes, num_tables=num_tables, dim=dim,
+        ).select(F.col(id_col).alias(out_id), "table", "bucket")
 
     qb = bucketed(queries, "query_id")
     cb = bucketed(corpus, "neighbor_id")
@@ -661,7 +462,7 @@ def cosine_near_dup_pairs(
     num_planes: int = 6,
     num_tables: int = 8,
     seed: int = 42,
-    dim: int | None = 64,
+    dim: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate detection (the SemDeDup-style
     dedup tier): every unordered pair (id_a < id_b) whose cosine
@@ -672,15 +473,21 @@ def cosine_near_dup_pairs(
     - ``"exact"``  — all-pairs verification tier. O(n^2); correct at
       any n but only affordable on a bounded corpus slice (it is the
       oracle the bucketed tiers are checked against).
-    - ``"md5"``    — hyperplane-LSH candidates via engine-portable md5
-      buckets (deterministic approximation, DuckDB-replayable — same
-      move as lsh_topk(method="md5")), then exact cosine verify.
-    - ``"xxhash64"`` — same shape on the fast bucket hash; the
-      production path. Candidates come from an OR-construction over
-      ``num_tables`` bucketings, so the pair join runs per bucket —
-      never all-pairs — and near pairs are missed only when they
-      collide in NO table (probability (1-p^k)^L, vanishing for
-      near-dup angles).
+    - ``"md5"``    — hyperplane-LSH candidates from the integer md5
+      planes of hyperplane_buckets_all_tables (deterministic
+      approximation, DuckDB-replayable — same move as lsh_topk), then
+      exact cosine verify.
+    - ``"seeded"`` — same shape on float planes seeded by ``seed``
+      (not oracle-replayed). On the sf0.1 near-dup corpus the md5
+      planes find the same 200 pairs from 6% more candidates (54,225
+      vs 51,079), each of which the exact-cosine verify pays for, so
+      the float planes stay the bench headliners' path.
+
+    Both LSH methods draw candidates from an OR-construction over
+    ``num_tables`` bucketings of ``dim``-wide vectors, so the pair
+    join runs per bucket — never all-pairs — and near pairs are missed
+    only when they collide in NO table (probability (1-p^k)^L,
+    vanishing for near-dup angles).
     """
     if method == "exact":
         a = corpus.select(
@@ -693,17 +500,6 @@ def cosine_near_dup_pairs(
         ).select("id_b", "__vb", l2_norm_d("__vb").alias("__nb"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        def one_table(t: int) -> DataFrame:
-            if method == "md5":
-                return hyperplane_buckets_md5(
-                    corpus, id_col=id_col, vec_col=vec_col,
-                    num_planes=num_planes, table=t, dim=dim,
-                )
-            return hyperplane_lsh_buckets(
-                corpus, id_col=id_col, vec_col=vec_col,
-                num_planes=num_planes, seed=seed + 7919 * t, dim=dim,
-            )
-
         # candidate generation on BARE IDS: the bucket self-join and
         # the cross-table dedup shuffle move 16-byte pair rows, not
         # the vectors — at 25x fixture scale the old shape (vectors
@@ -711,30 +507,16 @@ def cosine_near_dup_pairs(
         # float arrays and dominated the whole tier (SCALING_r13
         # profiling); vectors re-join AFTER dedup, exactly the shape
         # the DuckDB oracle replays (cand -> JOIN e av -> JOIN e bv)
-        if dim is not None:
-            # one Arrow matmul pass for every table's buckets
-            bucketed = hyperplane_buckets_all_tables(
-                corpus, id_col=id_col, vec_col=vec_col,
-                num_planes=num_planes, num_tables=num_tables,
-                dim=dim,
-                method="md5" if method == "md5" else "seeded",
-                seed=seed,
-            )
-        else:
-            tables = [
-                one_table(t).select(
-                    F.col(id_col), F.lit(t).alias("table"), "bucket"
-                )
-                for t in range(num_tables)
-            ]
-            bucketed = tables[0]
-            for t in tables[1:]:
-                bucketed = bucketed.unionByName(t)
+        bucketed = hyperplane_buckets_all_tables(
+            corpus, id_col=id_col, vec_col=vec_col,
+            num_planes=num_planes, num_tables=num_tables,
+            dim=dim, method=method, seed=seed,
+        )
         # the bare (id, table, bucket) relation feeds BOTH sides of
         # the self-join: lazily checkpoint it so the bucketing
         # (planes x tables projections per vector) computes once, not
         # twice — rows are ~24 bytes, so the block is tiny even at
-        # corpus scale (same _materialize discipline as registry.py)
+        # corpus scale (same materialize discipline as registry.py)
         bucketed = bucketed.transform(materialize)
         left = bucketed.select(
             F.col(id_col).alias("id_a"), "table", "bucket"

@@ -2,48 +2,45 @@
 
 Several operators compute a heavy projection once and have the rest of
 the plan read the materialized bytes (crawl extraction, shingle bases,
-MinHash signatures, CC labels, dHash fingerprints): without a lineage
-cut, Catalyst re-expands the shared subtree per reference (guide §1.2
-step 1). `localCheckpoint(eager=False)` is the zero-config tool for
-that, but it has two 100 TB liabilities (guide §5, VERDICT r13 #5):
+MinHash signatures, CC labels, dHash fingerprints, the registry's
+shared interaction frames): without a lineage cut, Catalyst re-expands
+the shared subtree per reference (guide §1.2 step 1) — the
+recommendations plan computed its interactions ~20x, and cutting it
+measured a 2x end-to-end win. Values are unchanged; this is a
+plan-shape optimization only.
+
+`localCheckpoint(eager=False)` is the zero-config tool for that, but it
+has two 100 TB liabilities (guide §5, VERDICT r13 #5):
 
 1. **No fault tolerance.** Local checkpoints delete lineage and keep
    blocks only on the computing executors — on a real cluster one lost
    executor makes the job unrecoverable rather than recomputable. (In
    `local[N]` mode there is no executor-loss failure mode distinct
    from driver loss, so this liability is strictly a cluster concern.)
-2. **Storage-pool pressure.** Corpus-sized checkpoints (extracted
-   text, shingle arrays) crowd executor storage memory and evict /
-   spill later stages' state.
+2. **Storage-pool pressure.** The blocks live in executor storage
+   memory; in a long-lived multi-pipeline driver they crowd the pool
+   and later heavy queries spill (measured: recommendations_capped
+   40.6 s in a fresh JVM vs ~100 s crowded, at 10x — SCALING_r5
+   annotation).
 
-Policy, selected per call through :func:`materialize`:
+Policy, applied by :func:`materialize`:
 
 - ``SPARK_GRAFT_CHECKPOINT_DIR`` set (or the session already has a
-  checkpoint dir): RELIABLE ``checkpoint(eager=False)`` — survives
-  executor loss, zero storage-memory footprint. The recommended
-  cluster deployment shape for every site, and the long-standing
-  behavior of the registry's ``_materialize``.
-- ``SPARK_GRAFT_MATERIALIZE=persist_disk``: ``corpus_sized`` frames
-  use ``persist(StorageLevel.DISK_ONLY)`` — keeps lineage (lost
-  blocks recompute instead of failing the job), holds no storage
-  MEMORY, costs one local-disk round trip. Bounded frames still use
-  ``localCheckpoint``.
-- default: ``localCheckpoint(eager=False)`` for everything — the
-  local-mode shape every committed bench line was measured under.
+  checkpoint dir): RELIABLE ``checkpoint(eager=False)`` — same values,
+  same lineage cut, survives executor loss, zero storage-memory
+  footprint. The recommended cluster deployment shape, where a
+  long-lived driver is the norm.
+- default: ``localCheckpoint(eager=False)`` — the zero-config shape
+  for ad-hoc sessions, and the one every committed bench line was
+  measured under.
 
-Why ``persist_disk`` is NOT the local default: ``persist`` registers
-the analyzed plan in the session CacheManager, so a LATER query whose
-plan contains the same subtree silently substitutes the cached
-relation. In a multi-query benchmark process that would let query B
-reuse bytes query A computed — contaminating per-query timings with
-cross-query cache hits (and reading as result-caching, which the bench
-contract forbids). ``localCheckpoint``/``checkpoint`` never register
-with the CacheManager; each query invocation recomputes its own plan.
-
-``corpus_sized=True`` marks frames whose size is proportional to the
-corpus payload (extracted text, shingle arrays); bounded frames
-(per-doc signatures, labels, histograms, 8-byte fingerprints) stay on
-``localCheckpoint`` under every mode except a reliable checkpoint dir.
+Neither form registers with the session CacheManager (``persist``
+would: a later query whose plan contains the same subtree would then
+silently read bytes an earlier query computed), so each query
+invocation recomputes its own plan and per-query timings stay clean.
+Both forms also fix the bytes once: ``operators/skew.rangepart_rank``
+relies on that, because a lineage recompute would re-sample its range
+boundaries and shift the partition ids its offsets were computed from.
 """
 
 from __future__ import annotations
@@ -53,21 +50,14 @@ import os
 from pyspark.sql import DataFrame
 
 
-def materialize(df: DataFrame, *, corpus_sized: bool = False) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Cut/reuse the plan above ``df`` per the policy above. Values are
     always unchanged; this only controls WHERE the materialized bytes
-    live and whether lineage survives."""
+    live and whether they survive executor loss."""
     sc = df.sparkSession.sparkContext
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt_dir and sc.getCheckpointDir() is None:
         sc.setCheckpointDir(ckpt_dir)
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=False)
-    if (
-        corpus_sized
-        and os.environ.get("SPARK_GRAFT_MATERIALIZE") == "persist_disk"
-    ):
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.DISK_ONLY)
     return df.localCheckpoint(eager=False)

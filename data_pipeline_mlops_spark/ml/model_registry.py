@@ -59,10 +59,18 @@ def save_version(
 
 
 def _metadata(spark: SparkSession, registry_path: str) -> DataFrame | None:
+    """The metadata table, or None when the registry has none yet.
+    Only a missing path reads as an empty registry: an unreadable table
+    must raise, or save_version's compare-and-swap would promote
+    whatever version comes next."""
+    from pyspark.errors import AnalysisException
+
     try:
         return spark.read.parquet(f"{registry_path}/metadata")
-    except Exception:
-        return None  # empty registry
+    except AnalysisException as ex:
+        if "PATH_NOT_FOUND" not in str(ex) and "Path does not exist" not in str(ex):
+            raise
+        return None
 
 
 def production_version(spark: SparkSession, registry_path: str) -> str | None:

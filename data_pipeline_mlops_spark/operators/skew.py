@@ -119,8 +119,7 @@ def rangepart_rank(
     rb = materialize(
         df.repartitionByRange(
             F.col(part_col).asc(), F.col(order_col).asc(), F.col(id_col).asc()
-        ).withColumn("__pid", F.spark_partition_id()),
-        corpus_sized=True,
+        ).withColumn("__pid", F.spark_partition_id())
     )
     seg = rb.groupBy("__pid", part_col).agg(F.count(F.lit(1)).alias("__c"))
     w_off = Window.partitionBy(part_col).orderBy("__pid").rowsBetween(

@@ -52,11 +52,7 @@ def prepare_corpus(
     # materialize the scored rows once: the skew-free ranking below
     # reads them twice (histogram build + probe side) and the quality
     # projection re-derives from text per reference otherwise
-    # corpus_sized: with_quality_score keeps every source column incl.
-    # text, so the block is payload-proportional (materialize.py policy)
-    scored = materialize(
-        text.with_quality_score(docs, "text"), corpus_sized=True
-    )
+    scored = materialize(text.with_quality_score(docs, "text"))
 
     # Rank-based quartile drop WITHOUT a per-language fact-sized sort:
     # a direct Window.partitionBy("lang") puts the dominant language

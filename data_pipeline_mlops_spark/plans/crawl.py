@@ -52,10 +52,7 @@ def extract_and_gate(
         # the gate read the materialized (id, text, counts) columns.
         # Values unchanged. Batch-only: streaming frames cannot
         # checkpoint, and the streaming ingest gates per micro-batch.
-        # corpus_sized: the extracted text is payload-proportional, so
-        # the spill-safe policy (materialize.py) routes it to reliable
-        # checkpoint / DISK_ONLY persist on clusters.
-        extracted = materialize(extracted, corpus_sized=True)
+        extracted = materialize(extracted)
     scored = with_quality_score(with_lang_id(extracted, "text"), "text")
     return scored.where(
         (F.col("quality_score") >= min_quality)

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_mlops_spark.functions import dedup_text, similarity, text
+from data_pipeline_mlops_spark.materialize import materialize
 from data_pipeline_mlops_spark.ml import cf
 from data_pipeline_mlops_spark.ml.interactions import extract_interactions
 from data_pipeline_mlops_spark.operators import (
@@ -103,32 +104,6 @@ def _interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Lazily materialize a subtree referenced multiple times in one
-    plan (lazy localCheckpoint truncates lineage at first action).
-    Without it, Catalyst re-expands shared Python-side subtrees per
-    reference — the recommendations plan computed interactions ~20x
-    (measured 2x end-to-end win). Values are unchanged; this is a
-    plan-shape optimization only.
-
-    localCheckpoint blocks live in EXECUTOR storage memory; in a
-    long-lived multi-pipeline driver they crowd the pool and later
-    heavy queries spill (measured: recommendations_capped 40.6 s
-    fresh-JVM vs ~100 s crowded at 10x — SCALING_r5 annotation).
-    RELIABLE checkpoints to storage are therefore the default whenever
-    a checkpoint location is available — either the session already
-    has one (``sc.setCheckpointDir``) or ``SPARK_GRAFT_CHECKPOINT_DIR``
-    names one: same values, same lineage cut, zero storage-memory
-    footprint — the 100 TB deployment shape, where a long-lived
-    driver is the norm. localCheckpoint remains only the zero-config
-    fallback for ad-hoc sessions. Round 14: policy centralized in
-    data_pipeline_mlops_spark.materialize (adds the DISK_ONLY-persist
-    mode for corpus-sized frames; see that module's docstring)."""
-    from data_pipeline_mlops_spark.materialize import materialize
-
-    return materialize(df)
 
 
 # --------------------------------------------------------------------------
@@ -647,7 +622,7 @@ def _item_similarity(
     so a bot mega-basket contributes at most cap² pairs to the shuffle
     instead of |basket|²; it bites at TPC-H scale (avg ~27 items per
     customer at sf0.01), and the oracle replays the same ranking."""
-    inter = _materialize(_interactions(spark, sf_dir))
+    inter = materialize(_interactions(spark, sf_dir))
     return cf.item_similarity(
         inter,
         user_col="customer_id",
@@ -782,7 +757,7 @@ def q_item_similarity_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_similar_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8: top-10 most similar items to one anchor item
     (reference recommendation/main.py:193-221)."""
-    inter = _materialize(_interactions(spark, sf_dir))
+    inter = materialize(_interactions(spark, sf_dir))
     sim = cf.item_similarity(
         inter, user_col="customer_id", item_col="product_id",
         min_cooccurrence=1,
@@ -829,9 +804,9 @@ def _recommendations(
     filter), and the materialized model drops the unused cooccurrence
     column — the pair shuffle and the checkpoint shrink to the
     anchors' share of the fan-out."""
-    inter = _materialize(_interactions(spark, sf_dir))
+    inter = materialize(_interactions(spark, sf_dir))
     purchases = inter.where(F.col("customer_id") <= 50)
-    sim = _materialize(
+    sim = materialize(
         cf.item_similarity(
             inter, user_col="customer_id", item_col="product_id",
             min_cooccurrence=1,
@@ -904,7 +879,7 @@ def q_recommendations_als(spark: SparkSession, sf_dir: str) -> DataFrame:
     item-item tier, tests/test_ml.py::test_als_quality_band)."""
     from data_pipeline_mlops_spark.ml.als import recommend_als, train_als
 
-    inter = _materialize(_interactions(spark, sf_dir))
+    inter = materialize(_interactions(spark, sf_dir))
     model = train_als(
         inter, user_col="customer_id", item_col="product_id",
         rank=16, max_iter=10, seed=42,
@@ -954,10 +929,10 @@ def q_recommendations_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             return model_registry.load_production(
                 spark, registry_path=reg, name="item_similarity"
             )
-        except Exception:
-            built = _materialize(
+        except FileNotFoundError:  # no production model yet
+            built = materialize(
                 cf.item_similarity(
-                    _materialize(_interactions(spark, sf_dir)),
+                    materialize(_interactions(spark, sf_dir)),
                     user_col="customer_id", item_col="product_id",
                     min_cooccurrence=1,
                     pack_pair_keys=True,
@@ -998,7 +973,7 @@ def q_cf_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("od"),
     )
     cut = "1998-01-01"
-    train = _materialize(
+    train = materialize(
         base.where(F.col("od") < cut).select(
             "customer_id", "product_id"
         ).distinct()
@@ -1228,7 +1203,7 @@ def q_doc_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget = 2000
     # slim + materialized once: the ranking reads the rows twice
     # (histogram + probe) and n_tokens re-tokenizes text otherwise
-    d = _materialize(
+    d = materialize(
         text.with_token_stats(_docs(spark, sf_dir), "text").select(
             "doc_id", "lang", "n_tokens"
         )
@@ -1835,7 +1810,7 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 10)
     return similarity.lsh_topk(
         queries, emb, id_col="vec_id", vec_col="embedding", k=5,
-        num_planes=6, num_tables=8, method="md5",
+        num_planes=6, num_tables=8,
     )
 
 
@@ -2342,7 +2317,7 @@ def q_cf_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("od"),
     )
     cut = "1998-01-01"
-    train = _materialize(
+    train = materialize(
         base.where(F.col("od") < cut).select(
             "customer_id", "product_id"
         ).distinct()
@@ -2350,7 +2325,7 @@ def q_cf_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = base.where(F.col("od") >= cut).select(
         "customer_id", "product_id"
     ).distinct()
-    sim = _materialize(
+    sim = materialize(
         cf.item_similarity(
             train, user_col="customer_id", item_col="product_id",
             min_cooccurrence=1,
@@ -4860,7 +4835,7 @@ def q_doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slim + materialized once: the ranking reads the scored rows
     # twice (histogram + probe) and the quality projection would
     # re-derive from text per reference otherwise
-    scored = _materialize(
+    scored = materialize(
         text.with_quality_score(_docs(spark, sf_dir), "text").select(
             "doc_id", "lang", "quality_score"
         )
@@ -5028,8 +5003,9 @@ def q_embedding_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket signs are exact int64 arithmetic and DuckDB replays the
     SAME buckets AND the same param rule from its own COUNT(*): the
     approximation is deterministic and fully oracled at every scale
-    (the same move as lsh_ann_topk). Production uses the xxhash64
-    bucket twin (bench: embedding_near_dups_fast)."""
+    (the same move as lsh_ann_topk). The bench headliner
+    embedding_near_dups_fast runs the same tier on the float "seeded"
+    planes."""
     corpus = _near_dup_corpus(spark, sf_dir)
     nb, nt = _near_dup_lsh_params(corpus)
     return similarity.cosine_near_dup_pairs(
@@ -6328,8 +6304,8 @@ def q_doc_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)
-    tk = _materialize(docs.select(text.tokens("text").alias("tk")))
-    uni = _materialize(
+    tk = materialize(docs.select(text.tokens("text").alias("tk")))
+    uni = materialize(
         tk.select(F.explode("tk").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -6345,7 +6321,7 @@ def q_doc_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select("p.a", "p.b")
-    big = _materialize(
+    big = materialize(
         pairs.groupBy("a", "b").agg(
             F.count(F.lit(1)).cast("long").alias("cnt_ab")
         )
@@ -6450,7 +6426,7 @@ def _copurchase_inter(
         inter = cf.cap_basket_size(
             inter, basket_col="ok", item_col="item", max_items=cap
         )
-    return _materialize(inter)
+    return materialize(inter)
 
 
 def _sql_copurchase_inter(cap: int | None) -> str:
@@ -8185,7 +8161,7 @@ def q_cf_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration."""
     from pyspark.sql import Window
 
-    inter = _materialize(_interactions(spark, sf_dir))
+    inter = materialize(_interactions(spark, sf_dir))
     pos = inter.where(F.col("customer_id") <= 30)
     items = inter.select("product_id").distinct()
     w_idx = Window.orderBy(F.col("product_id").asc())
@@ -8436,7 +8412,7 @@ def _item_triangles(
         )
         .select(F.col("o.s").alias("s"), F.col("o.t").alias("t"))
     )
-    e = _materialize(e)
+    e = materialize(e)
     wedge = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.s") == F.col("e2.s"))
@@ -8563,7 +8539,7 @@ def q_dedup_tier_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
     )
     exact, norm, shared = (
-        _materialize(exact), _materialize(norm), _materialize(shared)
+        materialize(exact), materialize(norm), materialize(shared)
     )
 
     def cnt(df, name):
@@ -10939,8 +10915,8 @@ def q_doc_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 bucket variant quantizes to exact int64 arithmetic so DuckDB
     replays the SAME buckets and the SAME param rule from its own
     COUNT(*) — the approximation itself is oracled at every scale,
-    not just the verify (production swaps in the xxhash64 bucket
-    twin, bench: doc_semdedup_fast)."""
+    not just the verify (the bench headliner doc_semdedup_fast runs
+    the same tier on the float "seeded" planes)."""
     corpus = _near_dup_corpus(spark, sf_dir)
     nb, nt = _near_dup_lsh_params(corpus)
     pairs = similarity.cosine_near_dup_pairs(
@@ -12458,7 +12434,7 @@ def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     model = fit_pca(emb, vec_col="embedding", k=32)
-    proj = _materialize(
+    proj = materialize(
         pca_project(model, emb, id_col="vec_id", vec_col="embedding")
     )
     return brute_force_topk(
@@ -12486,7 +12462,7 @@ def q_similar_items_als(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_als,
     )
 
-    inter = _materialize(_interactions(spark, sf_dir))
+    inter = materialize(_interactions(spark, sf_dir))
     model = train_als(
         inter, user_col="customer_id", item_col="product_id",
         rank=16, max_iter=10, seed=42,
@@ -12569,7 +12545,7 @@ def q_doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct("__toks"), lambda x: x.isin(*stops)
         )
     ).cast("long")
-    base = _materialize(
+    base = materialize(
         t.select(
             "doc_id",
             n.alias("n_words"),

@@ -130,7 +130,7 @@ def _release_persistent_rdds(spark) -> None:
     unpersist between pipelines or checkpoint to storage instead.
 
     The sweep now ALSO runs with SPARK_GRAFT_CHECKPOINT_DIR set (see
-    main), so _materialize cuts lineage via reliable checkpoints on
+    main), so materialize() cuts lineage via reliable checkpoints on
     disk instead of executor storage memory; checkpoint files of
     completed queries are deleted here to bound sweep disk usage
     (each timed query rebuilds its plan from scratch, so no live plan

@@ -195,9 +195,9 @@ def test_brute_force_topk_ordering(spark):
 def test_lsh_buckets_group_similar_vectors(spark):
     b = {
         r["vec_id"]: r["bucket"]
-        for r in similarity.hyperplane_lsh_buckets(
+        for r in similarity.hyperplane_buckets_all_tables(
             _vecs(spark), id_col="vec_id", vec_col="embedding",
-            num_planes=8,
+            num_planes=8, num_tables=1, dim=3,
         ).collect()
     }
     assert b[1] == b[2]  # near vectors share all sign bits w.h.p.
@@ -682,57 +682,112 @@ def test_auto_lsh_params_matches_sql_twin(spark):
         assert (nb, nb) == auto_lsh_params(n), n
 
 
-def test_all_tables_buckets_equal_per_table_builders(spark):
-    """The Arrow-matmul all-tables bucketing must produce EXACTLY the
-    buckets the pure-JVM per-table builders produce — for the md5
-    path this is the oracle contract (int64 matmul is order-immune),
-    for the seeded path the same driver-side component table feeds
-    both, so equality is expected except measure-zero float-sum sign
-    flips (none on this fixture)."""
+def test_all_tables_buckets_match_python_recomputation(spark):
+    """hyperplane_buckets_all_tables equals a plain-Python replay of
+    the bucket rule on the sf0.001 embeddings (3 tables x 5 planes):
+    bit p of table t's bucket is set iff that plane's projection is
+    > 0.
+
+    - md5: exact integers — each component quantized to
+      floor(x*1e6+0.5), each plane component the
+      _md5_component("t,p,i") integer the DuckDB oracles derive.
+    - seeded: float components _md5_component("x,seed+7919t,p,i")/1000
+      over the unquantized vector.
+
+    Real embeddings almost never project near 0, so the md5 leg
+    also plants one vector per (table, plane) whose quantized
+    projection on that plane is EXACTLY 0 (bit clear) while any other
+    rounding of the same floats leaves it nonzero: x_i = (c_j - 0.4)/1e6
+    and x_j = (-c_i - 0.4)/1e6 quantize to c_j and -c_i, so
+    c_j*c_i - c_i*c_j = 0; truncating instead of rounding, or not
+    quantizing at all, moves it to -(c_i+c_j) or a multiple of it,
+    which the choice c_i + c_j < 0 makes positive."""
+    import math
+
     from data_pipeline_mlops_spark.functions.similarity import (
+        _md5_component,
         hyperplane_buckets_all_tables,
-        hyperplane_buckets_md5,
-        hyperplane_lsh_buckets,
+    )
+    from tests.conftest import SF_SMALL
+
+    planes, tables, dim, seed = 5, 3, 64, 42
+    real = [
+        (r["vec_id"], list(r["embedding"]))
+        for r in spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+    planted = []
+    for t in range(tables):
+        for p in range(planes):
+            c = [_md5_component(f"{t},{p},{i}") for i in range(dim)]
+            i, j = next(
+                (i, j)
+                for i in range(dim)
+                for j in range(i + 1, dim)
+                if c[i] and c[j] and c[i] + c[j] < 0
+            )
+            v = [0.0] * dim
+            v[i], v[j] = (c[j] - 0.4) / 1e6, (-c[i] - 0.4) / 1e6
+            planted.append((10**6 + t * planes + p, v))
+    emb = spark.createDataFrame(
+        real + planted, "vec_id long, embedding array<float>"
+    )
+    vecs = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
+
+    def replay(component, value):
+        out = {}
+        for vid, vec in vecs:
+            x = [value(e) for e in vec]
+            for t in range(tables):
+                out[(vid, t)] = sum(
+                    1 << p
+                    for p in range(planes)
+                    if sum(e * component(t, p, i) for i, e in enumerate(x))
+                    > 0
+                )
+        return out
+
+    def spark_buckets(method):
+        return {
+            (r["vec_id"], r["table"]): r["bucket"]
+            for r in hyperplane_buckets_all_tables(
+                emb, id_col="vec_id", vec_col="embedding",
+                num_planes=planes, num_tables=tables, dim=dim,
+                method=method, seed=seed,
+            ).collect()
+        }
+
+    md5 = replay(
+        lambda t, p, i: _md5_component(f"{t},{p},{i}"),
+        lambda e: math.floor(e * 1000000.0 + 0.5),
+    )
+    for k, (vid, _) in enumerate(planted):
+        t, p = divmod(k, planes)
+        assert not md5[(vid, t)] >> p & 1  # the planted zero projection
+    assert spark_buckets("md5") == md5
+    assert spark_buckets("seeded") == replay(
+        lambda t, p, i: _md5_component(f"x,{seed + 7919 * t},{p},{i}")
+        / 1000.0,
+        float,
     )
 
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select("vec_id", "embedding")
 
-    allt = {
-        (r["vec_id"], r["table"]): r["bucket"]
-        for r in hyperplane_buckets_all_tables(
-            emb, id_col="vec_id", vec_col="embedding",
-            num_planes=5, num_tables=3, dim=64, method="md5",
-        ).collect()
-    }
-    for t in range(3):
-        per = {
-            (r["vec_id"], t): r["bucket"]
-            for r in hyperplane_buckets_md5(
-                emb, id_col="vec_id", vec_col="embedding",
-                num_planes=5, table=t, dim=64,
-            ).collect()
-        }
-        assert per == {k: v for k, v in allt.items() if k[1] == t}
+@pytest.mark.parametrize("width", [63, 65])
+def test_all_tables_buckets_reject_wrong_width(spark, width):
+    """Vectors whose width is not ``dim`` raise instead of bucketing
+    against a truncated or padded plane table."""
+    from pyspark.errors import PythonException
 
-    allt_s = {
-        (r["vec_id"], r["table"]): r["bucket"]
-        for r in hyperplane_buckets_all_tables(
+    emb = spark.createDataFrame(
+        [(1, [0.5] * width), (2, [-0.5] * width)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(PythonException, match="mismatch"):
+        similarity.hyperplane_buckets_all_tables(
             emb, id_col="vec_id", vec_col="embedding",
-            num_planes=5, num_tables=3, dim=64,
-            method="seeded", seed=42,
+            num_planes=4, num_tables=2, dim=64,
         ).collect()
-    }
-    for t in range(3):
-        per = {
-            (r["vec_id"], t): r["bucket"]
-            for r in hyperplane_lsh_buckets(
-                emb, id_col="vec_id", vec_col="embedding",
-                num_planes=5, seed=42 + 7919 * t, dim=64,
-            ).collect()
-        }
-        assert per == {k: v for k, v in allt_s.items() if k[1] == t}
 
 
 def test_skewfree_rank_matches_direct_window(spark):
@@ -785,30 +840,6 @@ def test_skewfree_rank_matches_direct_window(spark):
         ).collect()
     }
     assert got == direct
-
-
-def test_materialize_persist_disk_mode(spark, monkeypatch):
-    """SPARK_GRAFT_MATERIALIZE=persist_disk routes corpus-sized frames
-    to a DISK_ONLY persist (lineage kept — recompute-recoverable, no
-    storage-pool memory) while bounded frames stay on localCheckpoint;
-    values identical in every mode."""
-    import pytest
-
-    from data_pipeline_mlops_spark.materialize import materialize
-
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("session checkpoint dir pinned; reliable mode wins")
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    base = sorted(map(tuple, df.collect()))
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist_disk")
-    out = materialize(df, corpus_sized=True)
-    assert sorted(map(tuple, out.collect())) == base
-    lvl = out.storageLevel
-    assert lvl.useDisk and not lvl.useMemory  # DISK_ONLY
-    out.unpersist(True)
-    bounded = materialize(df)  # not corpus-sized: localCheckpoint path
-    assert sorted(map(tuple, bounded.collect())) == base
-    assert not bounded.storageLevel.useDisk
 
 
 def test_skewfree_rank_tie_bucket_matches_direct_window(spark):

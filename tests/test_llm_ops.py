@@ -287,7 +287,7 @@ def test_stratified_fixed_sample_exact_counts(spark):
 
 def test_embedding_near_dup_lsh_recall_vs_exact(spark):
     """The bucketed near-dup tier (both the md5 oracle twin and the
-    xxhash64 production path) must find exactly the pairs the exact
+    float "seeded" planes) must find exactly the pairs the exact
     all-pairs tier finds on the planted corpus: at near-dup angles
     (cosine ~0.99) the 6x8 OR-construction's miss probability is
     ~(1-0.95^6)^8 ~ 3e-5 per pair, so full recall here is the expected
@@ -311,7 +311,7 @@ def test_embedding_near_dup_lsh_recall_vs_exact(spark):
         exact = pairs("exact")
         assert len(exact) == 50  # every planted copy, nothing else
         assert pairs("md5") == exact
-        assert pairs("xxhash64") == exact
+        assert pairs("seeded") == exact
     finally:
         corpus.unpersist()
 

@@ -226,6 +226,39 @@ def test_model_registry_promote_and_load(spark, tmp_path):
     assert loaded[0]["item_b"] == "C"
 
 
+def test_model_registry_unreadable_metadata_raises(spark, tmp_path):
+    """Only a registry that does not exist reads as empty. A metadata
+    table that exists but cannot be read must raise: read as "no
+    production model", it would make save_version's compare-and-swap
+    promote whatever version comes next."""
+    import pytest
+
+    from data_pipeline_mlops_spark.ml import model_registry as reg
+
+    missing = str(tmp_path / "no_registry")
+    assert reg.production_version(spark, missing) is None
+    assert reg.production_metrics(spark, missing) is None
+
+    path = tmp_path / "registry"
+    (path / "metadata").mkdir(parents=True)
+    planted = path / "metadata" / "part-00000.snappy.parquet"
+    planted.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="part-00000"):
+        reg.production_version(spark, str(path))
+    sim = spark.createDataFrame(
+        [("A", "B", 2, 0.5)],
+        "item_a string, item_b string, cooccurrence long, cosine_sim double",
+    )
+    with pytest.raises(Exception, match="part-00000"):
+        reg.save_version(
+            spark, registry_path=str(path), version="v1",
+            tables={"item_similarity": sim},
+            metrics={"overall_coverage": 0.5, "precision_at_k": 0.1},
+        )
+    # no metadata row was appended, so nothing was promoted
+    assert [f.name for f in (path / "metadata").iterdir()] == [planted.name]
+
+
 def test_pq_adc_equals_exact_dot_on_clustered_data(spark):
     """Product quantization sanity: when every subvector is exactly a
     codebook centroid (corpus drawn from 8 prototypes, k=8 per

@@ -527,7 +527,7 @@ def test_triangle_counting_known_graph(spark):
 
 
 def test_materialize_reliable_checkpoint_switch(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CHECKPOINT_DIR flips _materialize from executor-
+    """SPARK_GRAFT_CHECKPOINT_DIR flips materialize from executor-
     memory localCheckpoint to reliable storage checkpoints: identical
     values, checkpoint files actually land on disk."""
     import os
