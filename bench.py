@@ -405,6 +405,7 @@ def main() -> None:
     # the 1-min load average at start/end next to every line instead
     load_start = round(os.getloadavg()[0], 2)
 
+    from data_pipeline_mlops_spark.materialize import release_storage
     from data_pipeline_mlops_spark.registry import QUERIES
     from data_pipeline_mlops_spark.session import get_spark
 
@@ -453,26 +454,18 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     timed = [n for n in HEADLINE if only is None or n in only]
     samples: dict[str, list[float]] = {name: [] for name in timed}
-    def _release_storage() -> None:
-        # lazy localCheckpoints accumulate in the executor storage
-        # pool across the interleave; once it fills, later samples
-        # measure cache eviction, not the plan (same discipline as
-        # scaling_sweep._release — with 55 headliners the r11 line
-        # showed a broad 1.3x inflation on cheap queries without this).
-        # Released BETWEEN PASSES, not between queries: the CF family
-        # legitimately shares one interactions checkpoint within a
-        # pass (releasing per-query re-timed that subtree into
-        # item_similarity/recommendations_served, +1.4-1.6x), and all
-        # prior rounds' lines were produced under intra-pass reuse.
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(True)
-
+    # Released BETWEEN PASSES, not between queries: lazy
+    # localCheckpoints accumulate in the executor storage pool across
+    # the interleave (with 55 headliners the r11 line showed a broad
+    # 1.3x inflation on cheap queries without a release), but the CF
+    # family legitimately shares one interactions checkpoint within a
+    # pass (releasing per query re-timed that subtree into
+    # item_similarity/recommendations_served, +1.4-1.6x), and all
+    # prior rounds' lines were produced under intra-pass reuse.
     for p in range(runs + 1):  # pass 0 is the discarded cold pass
         order = list(timed)
         random.Random(p).shuffle(order)  # seeded: reproducible order
-        _release_storage()
+        release_storage(spark)
         for name in order:
             fn = _EXTRA_FNS.get(name) or QUERIES[name].spark
             t0 = time.perf_counter()

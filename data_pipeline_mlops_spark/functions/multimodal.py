@@ -130,20 +130,6 @@ def extract_features(
     return df.mapInPandas(batches, schema=out_schema)
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: computes per-row frame timestamps
-    from metadata (pure column math). The decode of each frame is the
-    stubbed kernel above."""
-    return df.withColumn(
-        "frame_ts_ms",
-        F.sequence(
-            F.lit(0),
-            F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-            F.lit(every_ms),
-        ),
-    )
-
-
 def resize_media(
     df: DataFrame,
     *,

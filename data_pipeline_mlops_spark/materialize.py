@@ -41,13 +41,18 @@ invocation recomputes its own plan and per-query timings stay clean.
 Both forms also fix the bytes once: ``operators/skew.rangepart_rank``
 relies on that, because a lineage recompute would re-sample its range
 boundaries and shift the partition ids its offsets were computed from.
+
+A harness that times queries one after another in one session calls
+:func:`release_storage` between timings: lazy checkpoints otherwise
+accumulate, and later heavy queries spill every pass (the 40.6 s vs
+~100 s above), so the timing measures cache pressure, not the plan.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -61,3 +66,22 @@ def materialize(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
+
+
+def release_storage(spark: SparkSession) -> None:
+    """Free what earlier :func:`materialize` calls left behind: unpersist
+    every persistent RDD (local checkpoints included) and, when the
+    session has a checkpoint dir, delete its finished reliable-checkpoint
+    dirs. Only safe between queries: a DataFrame built before the call
+    may still read a checkpoint it deletes."""
+    sc = spark.sparkContext
+    it = sc._jsc.sc().getPersistentRDDs().values().iterator()
+    while it.hasNext():
+        it.next().unpersist(True)
+    ckpt = sc.getCheckpointDir()  # a URI such as file:/..., not a path
+    if ckpt:
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        if fs.exists(path):
+            for st in fs.listStatus(path):
+                fs.delete(st.getPath(), True)

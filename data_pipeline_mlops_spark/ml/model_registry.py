@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_mlops_spark.ml.evaluate import is_better_model
@@ -60,49 +60,46 @@ def save_version(
 
 def _metadata(spark: SparkSession, registry_path: str) -> DataFrame | None:
     """The metadata table, or None when the registry has none yet.
-    Only a missing path reads as an empty registry: an unreadable table
-    must raise, or save_version's compare-and-swap would promote
-    whatever version comes next."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{registry_path}/metadata")
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex) and "Path does not exist" not in str(ex):
-            raise
+    Existence is asked of the Hadoop FileSystem first: a read of a
+    missing path would also fail, but only after Spark logs a full
+    FileNotFoundException trace to stderr. Anything that exists goes
+    to the reader, so an unreadable table raises, or save_version's
+    compare-and-swap would promote whatever version comes next."""
+    path = f"{registry_path}/metadata"
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not jpath.getFileSystem(conf).exists(jpath):
         return None
+    return spark.read.parquet(path)
+
+
+def _production_row(spark: SparkSession, registry_path: str) -> Row | None:
+    """The latest promoted metadata row, or None."""
+    md = _metadata(spark, registry_path)
+    if md is None:
+        return None
+    rows = (
+        md.where(F.col("is_production"))
+        .orderBy(F.col("created_at").desc())
+        .limit(1)
+        .collect()
+    )
+    return rows[0] if rows else None
 
 
 def production_version(spark: SparkSession, registry_path: str) -> str | None:
     """Latest promoted version (the reference's `production` alias)."""
-    md = _metadata(spark, registry_path)
-    if md is None:
-        return None
-    rows = (
-        md.where(F.col("is_production"))
-        .orderBy(F.col("created_at").desc())
-        .limit(1)
-        .collect()
-    )
-    return rows[0]["version"] if rows else None
+    row = _production_row(spark, registry_path)
+    return None if row is None else row["version"]
 
 
 def production_metrics(spark: SparkSession, registry_path: str) -> dict | None:
-    md = _metadata(spark, registry_path)
-    if md is None:
+    row = _production_row(spark, registry_path)
+    if row is None:
         return None
-    rows = (
-        md.where(F.col("is_production"))
-        .orderBy(F.col("created_at").desc())
-        .limit(1)
-        .collect()
-    )
-    if not rows:
-        return None
-    r = rows[0]
     return {
-        "overall_coverage": r["overall_coverage"],
-        "precision_at_k": r["precision_at_k"],
+        "overall_coverage": row["overall_coverage"],
+        "precision_at_k": row["precision_at_k"],
     }
 
 

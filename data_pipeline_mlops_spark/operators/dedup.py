@@ -38,8 +38,3 @@ def dedup_keep_latest(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def distinct_values(df: DataFrame, col: str) -> DataFrame:
-    """D3: unique() (reference dags/daily_pipeline.py:364-365)."""
-    return df.select(col).distinct()

@@ -53,18 +53,3 @@ def cond_count(cond: Column, alias: str) -> Column:
     """COUNT(*) FILTER (WHERE cond) — conditional aggregation (SURVEY.md
     §2.5 A10, reference scripts/setup_source_db.py:305-314)."""
     return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(alias)
-
-
-def oracle_money_sum(expr: str, alias: str, scale: int = 2) -> str:
-    """DuckDB SQL mirroring :func:`money_sum` bit-for-bit."""
-    return (
-        f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(38,6))), {scale}) AS DOUBLE)"
-        f" AS {alias}"
-    )
-
-
-def oracle_money_avg(expr: str, alias: str, scale: int = 2) -> str:
-    return (
-        f"CAST(ROUND(CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE)"
-        f" / COUNT({expr}), {scale}) AS DOUBLE) AS {alias}"
-    )

@@ -21,7 +21,7 @@ orders reads back as an empty frame instead of failing.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +48,6 @@ class MedallionConfig:
     eval_fraction: float = 0.2
     seed: int = 42
     top_n: int = 10
-    extra: dict = field(default_factory=dict)
 
 
 def extract(df: DataFrame, cfg: MedallionConfig) -> DataFrame:

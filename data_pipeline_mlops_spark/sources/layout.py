@@ -209,14 +209,6 @@ def zorder_key_n(
     return key
 
 
-def zorder_key(col_a, col_b, *, min_a, max_a, min_b, max_b) -> F.Column:
-    """Two-column Morton key (back-compat wrapper over zorder_key_n)."""
-    return zorder_key_n(
-        [col_a, col_b], mins=[min_a, min_b], maxs=[max_a, max_b],
-        bits=[16, 16],
-    )
-
-
 def write_zordered(
     df: DataFrame,
     *,

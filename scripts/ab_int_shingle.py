@@ -104,18 +104,13 @@ def main() -> None:
     args = ap.parse_args()
 
     from data_pipeline_mlops_spark.functions import dedup_text
+    from data_pipeline_mlops_spark.materialize import release_storage
     from data_pipeline_mlops_spark.registry import QUERIES, _docs  # noqa: F401
     from data_pipeline_mlops_spark.session import get_spark
 
     spark = get_spark(app_name="ab-int-shingle")
     spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
     docs = _docs(spark, args.sf)
-
-    def _release() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(True)
 
     # correctness cross-check first: identical pair sets (capped form)
     cur = dedup_text.ngram_jaccard_pairs(
@@ -143,7 +138,7 @@ def main() -> None:
     ):
         samples = []
         for i in range(args.runs + 1):
-            _release()
+            release_storage(spark)
             t0 = time.perf_counter()
             fn().write.mode("overwrite").format("noop").save()
             if i > 0:

@@ -1,7 +1,10 @@
 """Capture `.explain("formatted")` for every bench headliner into
 plans/<round>/<query>_<tag>.txt (tag = before/after), plus a one-line
 plan-shape summary (Exchange count, join strategies, Python eval
-nodes) per query on stderr.
+nodes) per query on stderr. A plan with no file scan is flagged
+``plan_observed=false``: the eager graph queries (PageRank, LPA, CC)
+run while they are built, so their plan starts at a checkpoint and the
+edge build the caps change is not in it.
 
 Usage: python scripts/capture_plans.py [--tag before] [--only a,b,c]
        [--sf /root/testdata/sf0.1]
@@ -42,6 +45,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import bench
+    from data_pipeline_mlops_spark.plans.diagnose import plan_summary
     from data_pipeline_mlops_spark.registry import QUERIES
     from data_pipeline_mlops_spark.session import get_spark
 
@@ -67,7 +71,8 @@ def main() -> None:
         path = os.path.join(outdir, f"{name}_{args.tag}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
-        print(f"# {name}: {plan_shape(txt)}", file=sys.stderr)
+        note = "" if plan_summary(df).n_file_scans else " plan_observed=false"
+        print(f"# {name}: {plan_shape(txt)}{note}", file=sys.stderr)
     spark.stop()
 
 

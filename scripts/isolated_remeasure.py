@@ -3,9 +3,10 @@
 The bench interleave is the honest fleet-context number, but a drift
 flag on an UNCHANGED query needs a second opinion: this script times
 each named query alone — fresh SparkSession, one untimed cold run,
-then N timed runs with the persistent-RDD pool released between runs —
+then N timed runs with ``materialize.release_storage`` between runs —
 so the number measures the plan, not the neighbors' GC/storage
 residue. Emits one JSON line per query and a summary file.
+``scaling_sweep.py`` runs it once per scale point.
 
 Usage:
     python scripts/isolated_remeasure.py item_similarity user_uptime \
@@ -33,24 +34,19 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import _EXTRA_FNS
+    from data_pipeline_mlops_spark.materialize import release_storage
     from data_pipeline_mlops_spark.registry import QUERIES
     from data_pipeline_mlops_spark.session import get_spark
 
     spark = get_spark(app_name="isolated-remeasure")
     spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
 
-    def _release() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(True)
-
     results: dict[str, dict] = {}
     for name in args.queries:
         fn = _EXTRA_FNS.get(name) or QUERIES[name].spark
         samples: list[float] = []
         for i in range(args.runs + 1):  # run 0 cold, discarded
-            _release()
+            release_storage(spark)
             t0 = time.perf_counter()
             fn(spark, args.sf).write.mode("overwrite").format(
                 "noop"

@@ -53,6 +53,7 @@ def main() -> None:
         with open(ckpt_path) as fh:
             done = json.load(fh)
 
+    from data_pipeline_mlops_spark.materialize import release_storage
     from data_pipeline_mlops_spark.registry import QUERIES
     from data_pipeline_mlops_spark.session import get_spark
     from tests.oracle_compare import compare, duckdb_conn
@@ -82,20 +83,12 @@ def main() -> None:
         spark = get_spark(app_name="oracle-sweep")
         con = duckdb_conn(args.sf)
 
-        def _release_storage() -> None:
-            # lazy localCheckpoints accumulate across ~200 sequential
-            # compares and crowd the executor storage pool; once full,
-            # later heavy queries spill every pass (bench.py and
-            # scaling_sweep.py carry the same discipline — measured
-            # recommendations 86 s in-sweep vs 8 s isolated at sf0.1).
-            # No cross-query reuse exists here, so release per query.
-            jsc = spark.sparkContext._jsc.sc()
-            it = jsc.getPersistentRDDs().values().iterator()
-            while it.hasNext():
-                it.next().unpersist(True)
-
         for i, name in enumerate(todo):
-            _release_storage()
+            # lazy localCheckpoints accumulate across ~200 sequential
+            # compares and crowd the executor storage pool (measured
+            # recommendations 86 s in-sweep vs 8 s isolated at sf0.1);
+            # no cross-query reuse exists here, so release per query
+            release_storage(spark)
             t0 = time.time()
             timed_out = threading.Event()
             timers: list[threading.Timer] = []

@@ -57,6 +57,7 @@ def main() -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from data_pipeline_mlops_spark.materialize import release_storage
     from data_pipeline_mlops_spark.operators.skew import skewfree_rank
     from data_pipeline_mlops_spark.session import get_spark
 
@@ -104,12 +105,6 @@ def main() -> None:
             tie_bucket=lambda c: F.shiftright(c, 16),
         ).withColumnRenamed("__rank", "rk")
 
-    def release():
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(True)
-
     arms = [("direct", direct), ("skewfree", skewfree)]
     if args.scenario == "degenerate":
         arms.append(("guarded", guarded))
@@ -117,7 +112,7 @@ def main() -> None:
     for name, fn in arms:
         samples = []
         for i in range(args.runs + 1):  # first run cold, discarded
-            release()
+            release_storage(spark)
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             t0 = time.perf_counter()
             fn().select("stratum", "id", "rk").write.mode(

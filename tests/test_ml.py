@@ -259,6 +259,41 @@ def test_model_registry_unreadable_metadata_raises(spark, tmp_path):
     assert [f.name for f in (path / "metadata").iterdir()] == [planted.name]
 
 
+def test_model_registry_missing_path_is_not_read(spark, tmp_path, monkeypatch):
+    """A registry that does not exist yet is detected before any read,
+    so Spark never logs a FileNotFoundException trace for it."""
+    from pyspark.sql import DataFrameReader
+
+    from data_pipeline_mlops_spark.ml import model_registry as reg
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    missing = str(tmp_path / "no_registry")
+    assert reg.production_version(spark, missing) is None
+    assert reg.production_metrics(spark, missing) is None
+    assert reads == []
+
+    path = str(tmp_path / "registry")
+    sim = spark.createDataFrame(
+        [("A", "B", 2, 0.5)],
+        "item_a string, item_b string, cooccurrence long, cosine_sim double",
+    )
+    m = {"overall_coverage": 0.5, "precision_at_k": 0.1}
+    assert reg.save_version(
+        spark, registry_path=path, version="v1",
+        tables={"item_similarity": sim}, metrics=m, now=1.0,
+    )
+    assert reads == []  # the CAS found no metadata without reading
+    assert reg.production_metrics(spark, path) == m
+    assert reads == [(f"{path}/metadata",)]
+
+
 def test_pq_adc_equals_exact_dot_on_clustered_data(spark):
     """Product quantization sanity: when every subvector is exactly a
     codebook centroid (corpus drawn from 8 prototypes, k=8 per
