@@ -239,9 +239,26 @@ def recommend(
     small_user_band: bool = False,
 ) -> DataFrame:
     """M7: score(user, candidate) = Σ sim(candidate, purchased) over the
-    user's purchases; mask already-purchased (anti-join — the
-    reference's scores[idx] = -999, dags/daily_pipeline.py:519-520);
-    keep positive scores; per-user top-n (O4 window).
+    user's purchases; mask already-purchased items (the reference's
+    scores[idx] = -999, dags/daily_pipeline.py:519-520); keep positive
+    scores; per-user top-n (O4 window).
+
+    One user-keyed exchange serves all three user operators. The
+    purchases are hash-partitioned by user once and left-joined to the
+    similarity table. A left join can only build its right side, so
+    the planner broadcasts the similarity table when its size allows
+    and the scored rows keep the user partitioning. The owned
+    (user, item) rows come from the same exchange and are unioned in
+    with an owned flag: the ownership mask is folded into the score
+    aggregation, which drops a candidate when ``max`` of the flag is
+    set, so no anti-join re-shuffles both sides on two keys. Spark's
+    default ``spark.sql.requireAllClusterKeysForDistribution=false``
+    lets the user partitioning satisfy the (user, candidate)
+    aggregation, and the top-n window is keyed by user, so neither
+    adds an exchange. A similarity table too large to broadcast is
+    sort-merge joined on the item instead, and the aggregation then
+    re-shuffles. A null user's purchases are one group, so they are
+    masked like any other user's.
 
     `max_neighbors` (opt-in, changes results) keeps only the top-M
     similarity neighbors per item before scoring — the standard
@@ -256,17 +273,18 @@ def recommend(
     partitions stay intact, so row_number results are identical, but
     the sort runs over |purchased items| partitions instead of every
     item in the corpus — and (b) broadcasts the purchase set into the
-    scoring join and the ownership anti-join, so the similarity table
-    is never shuffled past its build. Without the flag (full-corpus
-    scoring, every user at once), the symmetric-hash plan is correct
-    and the co-location lever is bucketing both sides on the item key
-    (sources/bucketed.py; EXECUTION.md).
+    scoring join, so the similarity table is never shuffled past its
+    build; the one user exchange then sits on the unioned scored and
+    owned rows. Without the flag (full-corpus scoring, every user at once),
+    the symmetric-hash plan is correct and the co-location lever is
+    bucketing both sides on the item key (sources/bucketed.py;
+    EXECUTION.md).
 
     Output: user_col, item_col (candidate), score, rank.
     """
     sim = symmetrize(sim_upper)
-    basket = purchases.select(
-        F.col(user_col).alias("__user"), F.col(item_col).alias("item_a")
+    basket = purchases.selectExpr(
+        f"`{user_col}` AS __user", f"`{item_col}` AS item_a"
     )
     if small_user_band:
         sim = sim.join(
@@ -283,31 +301,47 @@ def recommend(
             .where(F.col("__nr") <= max_neighbors)
             .drop("__nr")
         )
-    scored = (
-        (F.broadcast(basket) if small_user_band else basket)
-        .join(sim, "item_a")
-        .groupBy(F.col("__user"), F.col("item_b").alias("__cand"))
-        .agg(
-            F.sum(F.col("cosine_sim").cast(SIM_DECIMAL)).alias("__score_dec")
+    if small_user_band:
+        scored = F.broadcast(basket).join(sim, "item_a")
+    else:
+        basket = basket.repartition("__user")
+        scored = basket.join(sim, "item_a", "left")
+    rows = scored.selectExpr(
+        "__user",
+        "item_b AS __cand",
+        f"CAST(cosine_sim AS {SIM_DECIMAL}) AS __sim",
+        "false AS __owned",
+    ).unionByName(
+        basket.selectExpr(
+            "__user",
+            "item_a AS __cand",
+            f"CAST(NULL AS {SIM_DECIMAL}) AS __sim",
+            "true AS __owned",
         )
     )
-    owned = purchases.select(
-        F.col(user_col).alias("__user"), F.col(item_col).alias("__cand")
-    )
     if small_user_band:
-        owned = F.broadcast(owned)
-    w = Window.partitionBy("__user").orderBy(
-        F.col("__score_dec").desc(), F.col("__cand").asc()
-    )
+        rows = rows.repartition("__user")
+    # expressions are SQL strings: a Column call costs about ten py4j
+    # round trips (call-site capture), a string one or a few
     return (
-        scored.join(owned, ["__user", "__cand"], "left_anti")
-        .where(F.col("__score_dec") > 0)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_n)
-        .select(
-            F.col("__user").alias(user_col),
-            F.col("__cand").alias(item_col),
-            F.col("__score_dec").cast("double").alias("score"),
+        rows.groupBy("__user", "__cand")
+        .agg(
+            F.expr("sum(__sim) AS __score_dec"),
+            F.expr("max(__owned) AS __owned"),
+        )
+        .where("NOT __owned AND __score_dec > 0")
+        .selectExpr(
+            "__user",
+            "__cand",
+            "__score_dec",
+            "row_number() OVER (PARTITION BY __user"
+            " ORDER BY __score_dec DESC, __cand) AS rank",
+        )
+        .where(f"rank <= {int(top_n)}")
+        .selectExpr(
+            f"__user AS `{user_col}`",
+            f"__cand AS `{item_col}`",
+            "CAST(__score_dec AS double) AS score",
             "rank",
         )
     )

@@ -108,18 +108,36 @@ def rangepart_rank(
     boundaries land (offsets absorb the split), so the output is
     deterministic even though the boundary sampling is not. Adds
     ``__rn`` (long), ``__n_part`` (long), and ``__rank`` (long, only
-    with ``with_order_rank``); ``part_col``/``order_col``/``id_col``
-    must be non-null and (part, order, id) unique per row (id a
-    tiebreaking key).
+    with ``with_order_rank``); (part, order, id) must be unique per
+    row (id a tiebreaking key).
+
+    A null part, order or id key raises when the frame is
+    materialized: the check sits in the projection that pins
+    ``__pid``, so it runs no extra job. Floating-point keys follow
+    Spark's SQL ordering, pinned by
+    ``test_rangepart_rank_float_key_ordering``: NaN sorts after every
+    other value including +inf, NaN equals NaN, and -0.0 equals 0.0.
+    So -0.0 and 0.0 orders are peers that ``id_col`` breaks and share
+    one ``__rank``, and -0.0 and 0.0 parts are one part.
     """
     from pyspark.sql import Window
 
     from data_pipeline_mlops_spark.materialize import materialize
 
+    keys = (part_col, order_col, id_col)
+    null_key = (
+        F.col(part_col).isNull() | F.col(order_col).isNull() | F.col(id_col).isNull()
+    )
     rb = materialize(
-        df.repartitionByRange(
-            F.col(part_col).asc(), F.col(order_col).asc(), F.col(id_col).asc()
-        ).withColumn("__pid", F.spark_partition_id())
+        df.repartitionByRange(*[F.col(c).asc() for c in keys]).withColumn(
+            "__pid",
+            F.when(
+                null_key,
+                F.raise_error(
+                    F.lit(f"rangepart_rank: null key in {', '.join(keys)}")
+                ),
+            ).otherwise(F.spark_partition_id()),
+        )
     )
     seg = rb.groupBy("__pid", part_col).agg(F.count(F.lit(1)).alias("__c"))
     w_off = Window.partitionBy(part_col).orderBy("__pid").rowsBetween(

@@ -14,9 +14,15 @@ item-similarity table back from the lake right after writing them.
 Each later stage then scans one small written partition instead of
 re-running the plan above it: without the read-back, the split's
 distinct shuffle over silver would run again for training and for
-every evaluation action. The read-backs pass the schema just written,
-so no job runs to infer it from a parquet footer, and a day with no
-orders reads back as an empty frame instead of failing.
+evaluation. The read-backs pass the schema just written, so no job
+runs to infer it from a parquet footer, and a day with no orders reads
+back as an empty frame instead of failing.
+
+Evaluation is one action: coverage, batch recommendation and
+precision@k form one user-partitioned plan that ends in one
+aggregation (`evaluate.daily_metrics`). Whether the scoring join
+broadcasts the similarity table is left to the planner's size rule on
+the just-written scan.
 """
 
 from __future__ import annotations
@@ -123,27 +129,18 @@ def evaluate_model(
     sim: DataFrame,
     cfg: MedallionConfig,
 ) -> dict[str, float]:
-    """M9-M10 exhaustively (reference dags/daily_pipeline.py:437-640)."""
-    cov = evaluate.coverage(
-        train_df, eval_df, user_col=cfg.customer_col, item_col=cfg.product_col
-    ).collect()[0]
-    recs = cf.recommend(
-        train_df, sim,
-        user_col=cfg.customer_col, item_col=cfg.product_col,
-        top_n=cfg.top_n,
-    )
-    prec = evaluate.precision_at_k(
-        recs, eval_df,
+    """M9-M10 exhaustively, in one action
+    (reference dags/daily_pipeline.py:437-640)."""
+    return evaluate.daily_metrics(
+        train_df,
+        eval_df,
+        cf.recommend(
+            train_df, sim,
+            user_col=cfg.customer_col, item_col=cfg.product_col,
+            top_n=cfg.top_n,
+        ),
         user_col=cfg.customer_col, item_col=cfg.product_col, k=cfg.top_n,
-    ).collect()[0]
-    return {
-        "eval_rows": float(cov["eval_rows"]),
-        "user_coverage": cov["user_coverage"],
-        "item_coverage": cov["item_coverage"],
-        "overall_coverage": cov["overall_coverage"],
-        "evaluated_users": float(prec["evaluated_users"]),
-        "precision_at_k": prec["precision_at_k"] or 0.0,
-    }
+    )
 
 
 def run_daily(

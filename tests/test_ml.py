@@ -4,8 +4,11 @@ split/dedup invariants (SURVEY.md §7 hard parts 1-3)."""
 from __future__ import annotations
 
 import math
+import random
 from decimal import Decimal
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_pipeline_mlops_spark.ml import cf, evaluate, interactions
@@ -169,6 +172,200 @@ def test_coverage_and_precision(spark):
     # u1: hits {B} -> 1/2 ; u2: hits {C} -> 1/2 ; avg = 0.5
     assert prec["evaluated_users"] == 2
     assert abs(prec["precision_at_k"] - 0.5) < 1e-9
+
+
+def _three_action_metrics(train, ev, sim, *, k):
+    """The reference for ``evaluate.daily_metrics``: the daily metrics
+    as three actions over plans built the older way. Coverage comes
+    from left joins to the distinct train keys, recommendations from a
+    scoring aggregation masked by a two-key ``left_anti`` join, and
+    precision from distinct eval pairs semi-joined to the users with
+    recommendations."""
+    users = train.select("user", F.lit(True).alias("__u")).distinct()
+    items = train.select("item", F.lit(True).alias("__i")).distinct()
+    total, user_cov, item_cov, both_cov = (
+        ev.join(users, "user", "left")
+        .join(items, "item", "left")
+        .agg(
+            F.count(F.lit(1)),
+            F.count("__u"),
+            F.count("__i"),
+            F.count(F.when(F.col("__u") & F.col("__i"), True)),
+        )
+        .collect()[0]
+    )
+    recs = _three_action_recommend(train, sim, k=k)
+    pairs = ev.distinct()
+    hits = (
+        recs.join(pairs, ["user", "item"])
+        .groupBy("user")
+        .agg(F.count(F.lit(1)).alias("h"))
+    )
+    evaluated, prec = (
+        recs.select("user")
+        .distinct()
+        .join(pairs.select("user").distinct(), "user", "left_semi")
+        .join(hits, "user", "left")
+        .agg(
+            F.count(F.lit(1)),
+            F.round(F.avg(F.coalesce("h", F.lit(0)) / F.lit(k)), 6),
+        )
+        .collect()[0]
+    )
+    denom = max(total, 1)
+    return {
+        "eval_rows": float(total),
+        "user_coverage": round(user_cov / denom, 6),
+        "item_coverage": round(item_cov / denom, 6),
+        "overall_coverage": round(both_cov / denom, 6),
+        "evaluated_users": float(evaluated),
+        "precision_at_k": prec or 0.0,
+    }
+
+
+def _three_action_recommend(train, sim, *, k):
+    scored = (
+        train.select("user", F.col("item").alias("item_a"))
+        .join(cf.symmetrize(sim), "item_a")
+        .groupBy("user", F.col("item_b").alias("item"))
+        .agg(F.sum(F.col("cosine_sim").cast(cf.SIM_DECIMAL)).alias("s"))
+    )
+    w = Window.partitionBy("user").orderBy(F.col("s").desc(), F.col("item"))
+    return (
+        scored.join(train, ["user", "item"], "left_anti")
+        .where(F.col("s") > 0)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("user", "item", F.col("s").cast("double").alias("score"), "rank")
+    )
+
+
+# Planted evaluation case, k = 2. Similarity upper triangle: A's three
+# neighbours tie at 0.5, E-F is negative and F-G is zero.
+PLANTED_SIM = [
+    ("A", "B", 0.5), ("A", "C", 0.5), ("A", "D", 0.5),
+    ("B", "E", 0.3), ("E", "F", -0.2), ("F", "G", 0.0), ("G", "H", 0.4),
+]
+PLANTED_TRAIN = [
+    ("u1", "A"),  # B, C and D tie at rank k: B and C win on item order
+    ("u1", None),  # a null item: u1 is still a train user
+    ("u4", "G"), ("u4", "H"),  # every positive candidate is owned
+    ("u6", "E"),  # B at 0.3; F is negative
+    ("u7", "F"),  # E is negative and G zero: no recommendation
+    ("u8", "A"),  # recommendations but no eval rows
+    (None, "A"), (None, "B"),  # a null user
+]
+PLANTED_EVAL = [
+    ("u1", "B"), ("u1", "B"),  # a duplicate eval row is one hit
+    ("u1", "D"),  # D lost the tie to C
+    ("u1", None),
+    ("u3", "A"),  # no train rows, so no recommendations
+    ("u4", "G"),  # owned, so never recommended
+    ("u6", "F"), ("u6", "B"),
+    ("u7", "G"),
+    (None, "C"), (None, "B"),
+]
+
+
+def _planted_case(spark):
+    schema = "user string, item string"
+    return (
+        spark.createDataFrame(PLANTED_TRAIN, schema),
+        spark.createDataFrame(PLANTED_EVAL, schema),
+        spark.createDataFrame(
+            PLANTED_SIM, "item_a string, item_b string, cosine_sim double"
+        ),
+    )
+
+
+def _random_case(spark, seed):
+    """Skewed random interactions with null users and items and
+    duplicate eval rows; the model is trained on the train rows."""
+    rng = random.Random(seed)
+
+    def row():
+        u = None if rng.random() < 0.04 else f"u{rng.randrange(30)}"
+        i = None if rng.random() < 0.04 else f"i{min(rng.randrange(25), rng.randrange(25))}"
+        return u, i
+
+    train_rows = [row() for _ in range(300)]
+    eval_rows = [row() for _ in range(80)]
+    eval_rows += eval_rows[:10]
+    schema = "user string, item string"
+    train = spark.createDataFrame(train_rows, schema)
+    return (
+        train,
+        spark.createDataFrame(eval_rows, schema),
+        cf.item_similarity(train, user_col="user", item_col="item"),
+    )
+
+
+@pytest.mark.parametrize("case", ["planted", "random1", "random2"])
+def test_daily_metrics_equal_three_action_reference(spark, case):
+    """The one-action metrics, and ``coverage`` and ``precision_at_k``
+    each on its own, equal the three-action composition: precision to
+    1e-6 (a mean of doubles), the rest exactly."""
+    k = 2 if case == "planted" else 3
+    if case == "planted":
+        train, ev, sim = _planted_case(spark)
+    else:
+        train, ev, sim = _random_case(spark, int(case[-1]))
+    want = _three_action_metrics(train, ev, sim, k=k)
+    recs = cf.recommend(train, sim, user_col="user", item_col="item", top_n=k)
+    got = evaluate.daily_metrics(
+        train, ev, recs, user_col="user", item_col="item", k=k
+    )
+    cov = evaluate.coverage(train, ev, user_col="user", item_col="item")
+    prec = evaluate.precision_at_k(
+        recs, ev, user_col="user", item_col="item", k=k
+    )
+    (cov,), (prec,) = cov.collect(), prec.collect()
+    alone = {
+        **{c: float(v) if c == "eval_rows" else v for c, v in cov.asDict().items()},
+        "evaluated_users": float(prec["evaluated_users"]),
+        "precision_at_k": prec["precision_at_k"] or 0.0,
+    }
+    for out in (got, alone):
+        assert out["precision_at_k"] == pytest.approx(
+            want["precision_at_k"], abs=1e-6
+        )
+        assert {c: v for c, v in out.items() if c != "precision_at_k"} == {
+            c: v for c, v in want.items() if c != "precision_at_k"
+        }
+    if case == "planted":
+        # u1 hits B of {B, C}; u6 hits B of {B}; nobody else is evaluated
+        assert got["evaluated_users"] == 2.0
+        assert got["precision_at_k"] == 0.5
+        # 11 rows; u1 x4, u4, u6 x2 and u7 are train users
+        assert got["user_coverage"] == round(8 / 11, 6)
+
+
+@pytest.mark.parametrize("case", ["planted", "random1", "random2"])
+def test_recommend_equal_three_action_reference(spark, case):
+    """``cf.recommend`` with its ownership mask folded into the score
+    aggregation returns the rows of a ``left_anti``-masked plan, with
+    or without ``small_user_band``. The null user is left out: the
+    anti-join never matches a null key, so it did not mask that
+    group's own items."""
+    if case == "planted":
+        train, _, sim = _planted_case(spark)
+    else:
+        train, _, sim = _random_case(spark, int(case[-1]))
+    want = sorted(
+        map(tuple, _three_action_recommend(train, sim, k=2)
+            .where(F.col("user").isNotNull()).collect())
+    )
+    for band in (False, True):
+        got = cf.recommend(
+            train, sim, user_col="user", item_col="item", top_n=2,
+            small_user_band=band,
+        )
+        assert sorted(map(tuple, got.where(F.col("user").isNotNull()).collect())) == want
+    null_recs = cf.recommend(
+        train, sim, user_col="user", item_col="item", top_n=10
+    ).where(F.col("user").isNull()).collect()
+    owned = {i for u, i in (tuple(r) for r in train.collect()) if u is None}
+    assert null_recs and not {r["item"] for r in null_recs} & owned
 
 
 def test_best_model_cas():

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -423,8 +424,6 @@ def test_asof_join_rejects_output_name_collision(spark):
     same-named columns (AMBIGUOUS_REFERENCE downstream); fail fast."""
     import datetime as dt
 
-    import pytest
-
     from data_pipeline_mlops_spark.operators.asof import asof_join
 
     t = dt.datetime(2024, 1, 1)
@@ -493,3 +492,55 @@ def test_rangepart_rank_matches_direct_window(spark):
         ).collect()
     }
     assert got == direct
+
+
+def test_rangepart_rank_float_key_ordering(spark):
+    """Planted NaN, +-inf and -0.0 keys: NaN sorts after +inf and
+    equals NaN, -0.0 equals 0.0 (``id`` breaks the tie and both share
+    one ``__rank``), and -0.0 and 0.0 parts are one part — the same as
+    the direct window."""
+    from pyspark.sql import Window
+
+    from data_pipeline_mlops_spark.operators.skew import rangepart_rank
+
+    inf, nan = float("inf"), float("nan")
+    order = [
+        (-inf, 10), (-1.0, 11), (-0.0, 13), (0.0, 12),
+        (1.0, 14), (inf, 15), (nan, 17), (nan, 16),
+    ]
+    rows = [(0.0 if i % 2 else -0.0, v, i) for v, i in order]
+    rows += [(nan, 2.0, 20), (nan, nan, 21), (nan, 1.0, 22)]
+    df = spark.createDataFrame(rows, "p double, v double, id long")
+    rk = rangepart_rank(
+        df, part_col="p", order_col="v", id_col="id", with_order_rank=True
+    )
+    got = {
+        r["id"]: (r["__rn"], r["__rank"], r["__n_part"]) for r in rk.collect()
+    }
+    assert got == {
+        10: (1, 1, 8), 11: (2, 2, 8), 12: (3, 3, 8), 13: (4, 3, 8),
+        14: (5, 5, 8), 15: (6, 6, 8), 16: (7, 7, 8), 17: (8, 7, 8),
+        22: (1, 1, 3), 20: (2, 2, 3), 21: (3, 3, 3),
+    }
+    w = Window.partitionBy("p").orderBy("v", "id")
+    direct = {
+        r["id"]: (r["rn"], r["rk"])
+        for r in df.select(
+            "id",
+            F.row_number().over(w).alias("rn"),
+            F.rank().over(Window.partitionBy("p").orderBy("v")).alias("rk"),
+        ).collect()
+    }
+    assert {i: v[:2] for i, v in got.items()} == direct
+
+
+@pytest.mark.parametrize("null_col", ["p", "v", "id"])
+def test_rangepart_rank_rejects_null_keys(spark, null_col):
+    from data_pipeline_mlops_spark.operators.skew import rangepart_rank
+
+    rows = [("a", 1.0, 1), ("a", 2.0, 2), ("b", 1.0, 3)]
+    df = spark.createDataFrame(rows, "p string, v double, id long").withColumn(
+        null_col, F.when(F.col("id") == 2, None).otherwise(F.col(null_col))
+    )
+    with pytest.raises(Exception, match="rangepart_rank: null key"):
+        rangepart_rank(df, part_col="p", order_col="v", id_col="id").collect()

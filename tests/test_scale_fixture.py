@@ -99,3 +99,19 @@ def test_offset_collision_raises(spark, tmp_path, table, col, planted):
     with pytest.raises(ValueError, match=f"{table}.{col}"):
         build_fixture(spark, str(src), str(dst), 2)
     assert not dst.exists() and not (tmp_path / "dst.tmp").exists()
+
+
+def test_cpu_scaling_probe_caps_rows(spark, fixture2x, monkeypatch):
+    """bench.py's CPU probe reads at most ``CPU_PROBE_ROWS`` lineitem
+    rows, counted from the footers of a multi-file fixture; at or
+    below the cap its plan has no limit."""
+    import bench
+
+    monkeypatch.setattr(bench, "CPU_PROBE_ROWS", 6000)
+
+    def plan(sf_dir):
+        df = bench._cpu_scaling_probe(spark, sf_dir)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "GlobalLimit 6000" in plan(fixture2x)
+    assert "Limit" not in plan(SF_SMALL)
