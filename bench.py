@@ -466,7 +466,7 @@ def main() -> None:
     timed = [n for n in HEADLINE if only is None or n in only]
     samples: dict[str, list[float]] = {name: [] for name in timed}
     # Released BETWEEN PASSES, not between queries: lazy
-    # localCheckpoints accumulate in the executor storage pool across
+    # materialize cuts accumulate in the executor storage pool across
     # the interleave (with 55 headliners the r11 line showed a broad
     # 1.3x inflation on cheap queries without a release), but the CF
     # family legitimately shares one interactions checkpoint within a

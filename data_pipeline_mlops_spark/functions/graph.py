@@ -11,8 +11,10 @@ every vertex takes the min of its label and its neighbors' labels;
 stop when a round changes nothing. Converges in O(component diameter)
 rounds — near-dup clusters are shallow (LSH-bucket cliques), so
 single-digit rounds in practice, with `max_iters` as the safety bound.
-Each round is one shuffle (join on vertex) + one aggregation; lineage
-is truncated per round with localCheckpoint so plans stay flat.
+Each round is one shuffle (join on vertex) + one aggregation; each
+round's labels are cut through `materialize` so plans stay flat, and
+the previous round's cut is released once the convergence count has
+filled the next, so a run holds one round of labels, not all of them.
 
 This is the iterative-algorithm pattern on DataFrames: driver-side loop
 over fully distributed rounds, one scalar action per round for
@@ -24,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_mlops_spark.materialize import materialize
+from data_pipeline_mlops_spark.materialize import materialize, release
 
 
 def connected_components(
@@ -48,13 +50,13 @@ def connected_components(
     are stable, so the default bound is generous; raise it for corpora
     with pathological chain topologies.
     """
-    sym = (
+    sym = materialize(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .union(
             edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     # Iterate ONLY over edge-touched vertices: an isolated vertex has no
     # neighbors, so its label provably never changes — carrying the full
@@ -76,9 +78,9 @@ def connected_components(
             "left_semi",
         )
     )
-    labels = touched.select(
-        "v", F.col("v").alias("label")
-    ).localCheckpoint()
+    labels = cut = materialize(
+        touched.select("v", F.col("v").alias("label")), eager=True
+    )
 
     converged = False
     for _ in range(max_iters):
@@ -106,6 +108,9 @@ def connected_components(
         changed = stepped.where(
             F.col("label") != F.col("old_label")
         ).count()
+        # the count filled this round's cut: the previous one is dead
+        release(cut)
+        cut = stepped
         labels = stepped.drop("old_label")
         if changed == 0:
             converged = True
@@ -160,8 +165,11 @@ def pagerank(
 
     Scale shape: one join edges x (deg, pr) + one groupBy(dst) per
     iteration — the standard shuffle-bound power iteration; lineage is
-    truncated per round. The vertex-count scalar N stays distributed
-    (broadcast 1-row frame). Vertices with no outgoing edges simply
+    cut per round through ``materialize``. No action runs per round, so
+    a round's cut cannot be released mid-run: the caller's first action
+    fills every round's cut, and they stay until the caller frees them
+    (``materialize.release_storage``). The vertex-count scalar N stays
+    distributed (broadcast 1-row frame). Vertices with no outgoing edges simply
     contribute nothing (classic dangling-mass simplification, noted so
     the oracle replays the same recurrence).
     """
@@ -244,7 +252,10 @@ def label_propagation(
     argmax window (partitions are vertex-sized — no skew beyond
     degree skew, the same hot spot PageRank has; salt hub vertices'
     count aggregation at web scale). Lineage is cut per round like
-    connected_components, so ``iters`` stays bounded-plan.
+    connected_components, so ``iters`` stays bounded-plan; unlike it,
+    no action runs per round, so earlier rounds' cuts cannot be
+    released mid-run and stay until the caller frees them
+    (``materialize.release_storage``).
 
     The third iterative graph operator next to connected_components
     (hash-min) and pagerank (power iteration); unlike components, LPA

@@ -13,6 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+# skewfree_rank's tie-group guard: an integral id splits each tie group
+# into id ranges of 2^TIE_BUCKET_BITS
+TIE_BUCKET_BITS = 20
 
 
 def salted_sum(
@@ -171,7 +176,6 @@ def skewfree_rank(
     id_col: str,
     descending: bool = False,
     with_cumsum: bool = False,
-    tie_bucket=None,
 ) -> DataFrame:
     """`row_number() OVER (PARTITION BY part ORDER BY order, id)` —
     and optionally the running SUM of ``order_col`` over the same
@@ -202,19 +206,17 @@ def skewfree_rank(
     Step 3's bound is the DEGENERATE-TIE hazard (VERDICT r13): a score
     distribution where one (part, order-value) pair owns most rows
     (coarse integer quality scores, a default value) re-creates a
-    single large sort task. ``tie_bucket`` (opt-in) guards it: a
-    callable ``Column -> Column`` producing an ORDER-PRESERVING
-    coarsening of ``id_col`` (monotonic non-decreasing under the same
-    ordering — e.g. ``lambda c: F.shiftright(c, 20)`` for integer ids,
-    a fixed-width prefix for padded string ids). The histogram then
-    counts per (part, order-value, bucket) and the tie window
-    partitions by the same triple, so no sort task exceeds the id
-    span of one bucket (``2^k`` rows for a shiftright(k) bucket, ids
+    single large sort task. An INTEGRAL ``id_col`` guards it: the id
+    range bucket ``id >> TIE_BUCKET_BITS`` is an order-preserving
+    coarsening of the id, so the histogram counts per (part,
+    order-value, bucket) and the tie window partitions by the same
+    triple. No sort task then exceeds ``2^TIE_BUCKET_BITS`` rows (ids
     being unique) while rank/cumsum stay bit-identical — earlier
     buckets of the same order value fold into the prefix exactly like
-    earlier order values. Size the bucket so the histogram stays
-    broadcastable: #buckets per tie group ~ id_range / 2^k; pick k so
-    value-space x bucket count stays far under fact size.
+    earlier order values. The histogram grows by the number of buckets
+    per tie group (id range / 2^TIE_BUCKET_BITS); it stays
+    broadcastable while that times the order-value count stays far
+    under the fact size. A non-integral id gets no bucket.
 
     Adds columns: ``__rank`` (long), ``__n_part`` (rows in the
     partition, long), and ``__cum`` (long) when requested.
@@ -225,8 +227,8 @@ def skewfree_rank(
 
     o = F.col(order_col).desc() if descending else F.col(order_col).asc()
     tb: list[str] = []
-    if tie_bucket is not None:
-        df = df.withColumn("__tb", tie_bucket(F.col(id_col)))
+    if isinstance(df.schema[id_col].dataType, IntegralType):
+        df = df.withColumn("__tb", F.shiftright(id_col, TIE_BUCKET_BITS))
         tb = ["__tb"]
     hist = df.groupBy(part_col, order_col, *tb).agg(
         F.count(F.lit(1)).alias("__cnt")

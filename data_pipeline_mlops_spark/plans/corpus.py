@@ -63,21 +63,15 @@ def prepare_corpus(
     # pinned by tests/test_functions.py::
     # test_skewfree_rank_matches_direct_window and the oracle).
     ranked = skewfree_rank(
-        scored, part_col="lang", order_col="quality_score",
-        id_col="doc_id",
-        # r14 degenerate-tie guard (VERDICT r13 #4): 2^20-id buckets
-        # bound the tie-group sort even when one rounded score value
-        # dominates a language; values identical (SKEW_RANK_DEMO_r14)
-        tie_bucket=lambda c: F.shiftright(c, 20),
+        scored, part_col="lang", order_col="quality_score", id_col="doc_id"
     )
-    kept = (
+    # four downstream consumers (pair join x2 sides, CC vertices,
+    # survivor join) — materialize once
+    kept = materialize(
         ranked.where(
             F.col("__rank") > F.floor((F.col("__n_part") + 3) / F.lit(4))
-        )
-        .select("doc_id", "lang", "text")
-        # four downstream consumers (pair join x2 sides, CC vertices,
-        # survivor join) — materialize once
-        .localCheckpoint()
+        ).select("doc_id", "lang", "text"),
+        eager=True,
     )
 
     pairs = dedup_text.ngram_jaccard_pairs(

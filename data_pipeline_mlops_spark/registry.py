@@ -1211,11 +1211,6 @@ def q_doc_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = skewfree_rank(
         d, part_col="lang", order_col="n_tokens", id_col="doc_id",
         descending=True, with_cumsum=True,
-        # r14 degenerate-tie guard: n_tokens is a coarse INTEGER, so a
-        # hot (lang, token-count) pair is plausible at corpus scale;
-        # id-range buckets of 2^20 bound every tie sort task (values
-        # identical — ids < 2^20 at fixture scale, bucket = 0 for all)
-        tie_bucket=lambda c: F.shiftright(c, 20),
     )
     return (
         ranked.where(F.col("__cum") <= budget)
@@ -4841,12 +4836,7 @@ def q_doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranked = skewfree_rank(
-        scored, part_col="lang", order_col="quality_score",
-        id_col="doc_id",
-        # r14 degenerate-tie guard (VERDICT r13 #4): rounded scores
-        # collide on degenerate docs (e.g. score exactly 1.0 classes);
-        # 2^20-id buckets bound the tie sort, values identical
-        tie_bucket=lambda c: F.shiftright(c, 20),
+        scored, part_col="lang", order_col="quality_score", id_col="doc_id"
     )
     return ranked.select(
         "doc_id",

@@ -52,6 +52,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_mlops_spark.materialize import materialize
 from data_pipeline_mlops_spark.plans.crawl import extract_and_gate
 from data_pipeline_mlops_spark.sources.txn import ManifestTable
 
@@ -150,10 +151,7 @@ def crawl_ingest_batch(
         (F.col("__seen_doc") == F.col(id_col))
         & (F.col("__seen_batch") == F.lit(int(batch_id)))
     )
-    classified = ranked.select(
-        F.col(id_col).alias("doc_id"),
-        "text", "predicted_lang", "quality_score", "n_chars",
-        "link_text_share", "text_hash",
+    status = (
         F.when(self_replay, F.lit("accepted"))
         # crashed-batch replay: the first attempt committed this
         # batch's winner to the seen index, so the in-batch losers
@@ -170,9 +168,17 @@ def crawl_ingest_batch(
         .when(F.col("__seen_doc").isNotNull(), F.lit("dup_history"))
         .when(F.col("__rk") > 1, F.lit("dup_in_batch"))
         .otherwise(F.lit("accepted"))
-        .alias("status"),
-        F.coalesce(self_replay, F.lit(False)).alias("__replayed"),
-    ).localCheckpoint()  # pin before the index mutates beneath it
+    )
+    classified = materialize(  # pin before the index mutates beneath it
+        ranked.select(
+            F.col(id_col).alias("doc_id"),
+            "text", "predicted_lang", "quality_score", "n_chars",
+            "link_text_share", "text_hash",
+            status.alias("status"),
+            F.coalesce(self_replay, F.lit(False)).alias("__replayed"),
+        ),
+        eager=True,
+    )
 
     accepted = classified.where(F.col("status") == "accepted")
     fresh = accepted.where(~F.col("__replayed"))
@@ -204,21 +210,20 @@ def crawl_ingest_batch(
             ),
             mode="append",
         )
-    decisions = (
+    decisions = materialize(
         roster.join(
             classified.select("doc_id", "status", "text_hash"),
             "doc_id",
             "left",
-        )
-        .select(
+        ).select(
             "doc_id",
             F.coalesce(F.col("status"), F.lit("rejected_gate")).alias(
                 "status"
             ),
             "text_hash",
             F.lit(batch_id).alias("batch_id"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     # the applied marker — partitioned by batch_id so the redelivery
     # probe prunes manifest-side, and replace_partitions makes a

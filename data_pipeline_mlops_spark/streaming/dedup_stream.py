@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_mlops_spark.functions import dedup_text
+from data_pipeline_mlops_spark.materialize import materialize
 from data_pipeline_mlops_spark.schemas import nullable
 from data_pipeline_mlops_spark.sources.txn import ManifestTable
 
@@ -109,11 +110,14 @@ def bulk_seed(
     historical corpus — correct for a CLEANED corpus, but a bootstrap
     must represent what is actually there.)"""
     rows_per_band = num_hashes // bands
-    sigs = dedup_text.minhash_signatures(
-        docs, id_col=id_col, text_col=text_col,
-        num_hashes=num_hashes, shingle_n=shingle_n,
-        hash_method=hash_method,
-    ).localCheckpoint()
+    sigs = materialize(
+        dedup_text.minhash_signatures(
+            docs, id_col=id_col, text_col=text_col,
+            num_hashes=num_hashes, shingle_n=shingle_n,
+            hash_method=hash_method,
+        ),
+        eager=True,
+    )
     banded = dedup_text.banded_signatures(
         sigs, id_col=id_col, bands=bands,
         rows_per_band=rows_per_band, hash_method=hash_method,
@@ -141,15 +145,21 @@ def dedup_batch(
     agreement threshold (~ Jaccard threshold)."""
     spark = batch_df.sparkSession
     rows_per_band = num_hashes // bands
-    new_sigs = dedup_text.minhash_signatures(
-        batch_df, id_col=id_col, text_col=text_col,
-        num_hashes=num_hashes, shingle_n=shingle_n,
-        hash_method=hash_method,
-    ).localCheckpoint()  # one signature pass over new text only
-    new_bands = dedup_text.banded_signatures(
-        new_sigs, id_col=id_col, bands=bands,
-        rows_per_band=rows_per_band, hash_method=hash_method,
-    ).localCheckpoint()
+    new_sigs = materialize(  # one signature pass over new text only
+        dedup_text.minhash_signatures(
+            batch_df, id_col=id_col, text_col=text_col,
+            num_hashes=num_hashes, shingle_n=shingle_n,
+            hash_method=hash_method,
+        ),
+        eager=True,
+    )
+    new_bands = materialize(
+        dedup_text.banded_signatures(
+            new_sigs, id_col=id_col, bands=bands,
+            rows_per_band=rows_per_band, hash_method=hash_method,
+        ),
+        eager=True,
+    )
 
     nb = new_bands.select(F.col(id_col).alias("__new"), "band", "band_hash")
     cands = (
@@ -223,7 +233,7 @@ def dedup_batch(
     )
     # Roster is the BATCH, not the signature table: a doc too short to
     # shingle has no signature row but still needs a (survivor) verdict.
-    decisions = (
+    decisions = materialize(  # pin before the index mutates beneath it
         batch_df.select(F.col(id_col))
         .join(best.withColumnRenamed("__new", id_col), id_col, "left")
         .select(
@@ -232,8 +242,8 @@ def dedup_batch(
             F.col("__m.__old").alias("matched_id"),
             F.col("__m.est_jaccard").alias("est_jaccard"),
             F.lit(batch_id).alias("batch_id"),
-        )
-        .localCheckpoint()  # pin before the index mutates beneath it
+        ),
+        eager=True,
     )
     keep = decisions.where(~F.col("is_duplicate")).select(id_col)
     # All-duplicate batches skip the index commits entirely: an empty

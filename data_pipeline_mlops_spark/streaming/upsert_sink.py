@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_mlops_spark.materialize import materialize
 from data_pipeline_mlops_spark.sources.txn import ManifestTable
 
 
@@ -114,11 +115,12 @@ def upsert_batch(
     winners = _merge_winners(
         existing, batch_df, key_cols=key_cols, order_col=order_col
     )
-    # the window repartitions by key; localCheckpoint materializes the
-    # winners BEFORE the overwrite starts deleting the very partitions
-    # the plan still needs to read
+    # the window repartitions by key; the eager cut pins the winners
+    # BEFORE the overwrite starts deleting the very partitions the plan
+    # still needs to read (a reliable checkpoint under a checkpoint dir,
+    # so a lost executor cannot take the only copy with it)
     (
-        winners.localCheckpoint()
+        materialize(winners, eager=True)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
@@ -137,7 +139,7 @@ def upsert_batch_txn(
     """Transactional upsert: merge + manifest commit; returns the
     committed version (None for an empty batch).
 
-    No localCheckpoint needed: staged files are NEW paths, so the plan
+    No lineage cut needed: staged files are NEW paths, so the plan
     reading old files and the write creating new ones never collide —
     readers of the previous version stay consistent throughout."""
     spark = batch_df.sparkSession

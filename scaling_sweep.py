@@ -39,7 +39,10 @@ Usage:
 ``SPARK_GRAFT_SF_DIR`` is the base fixture (default sf0.1); replicas
 are built once under ``.scale_cache/`` and reused.
 ``SPARK_GRAFT_CHECKPOINT_DIR`` defaults to ``.scale_cache/ckpt``, so
-``materialize`` cuts lineage to disk instead of executor memory.
+``materialize`` cuts lineage to disk instead of executor memory. That
+covers every cut in the package, the eager ones included: the timed
+dedup batch writes its signature, band and verdict cuts as reliable
+checkpoints, so its time includes that checkpoint I/O.
 """
 
 from __future__ import annotations
@@ -264,6 +267,7 @@ def time_dedup_batch(spark, sf_dir: str, index_root: str, runs: int) -> dict:
     band rows after seeding."""
     from pyspark.sql import functions as F
 
+    from data_pipeline_mlops_spark.materialize import materialize
     from data_pipeline_mlops_spark.streaming.dedup_stream import (
         DedupIndex,
         bulk_seed,
@@ -287,7 +291,7 @@ def time_dedup_batch(spark, sf_dir: str, index_root: str, runs: int) -> dict:
     # any copy band; half keep their text (dup hits against history),
     # half perturbed (accepted) — a realistic mixed batch, identical
     # across index sizes.
-    probe = (
+    probe = materialize(
         spark.read.parquet(f"{BASE}/documents.parquet")
         .where(F.col("doc_id") < 500)
         .select(
@@ -296,8 +300,8 @@ def time_dedup_batch(spark, sf_dir: str, index_root: str, runs: int) -> dict:
                 F.col("doc_id") % 2 == 0, F.col("text")
             ).otherwise(F.concat(F.col("text"), F.lit(" probe-novel")))
             .alias("text"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     best = None
     for p in range(runs + 1):  # pass 0 cold, discarded; replays converge

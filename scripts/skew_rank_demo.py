@@ -15,20 +15,18 @@ timed runs each. The direct plan sorts the hot stratum's 90% of rows
 in a single task; the skew-free plan distributes it over the
 (stratum, score) tie groups.
 
-Round 14 adds ``--scenario degenerate`` (VERDICT r13 #4): the
-DEGENERATE-TIE shape — 90% of all rows share ONE (stratum, score)
-pair, e.g. a coarse integer quality score with a dominant default —
-where the r13 skewfree_rank's tie-group window itself re-creates a
-single giant sort task. Three arms there:
-
-  direct:    the per-stratum window (one 3.6M-row sort task)
-  skewfree:  histogram + tie groups, NO guard (one 3.6M-row TIE sort)
-  guarded:   skewfree_rank(tie_bucket=shiftright(id, 16)) — the tie
-             group splits into <=2^16-row id-range buckets, so no
-             sort task exceeds 65,536 rows
+``--scenario degenerate`` (VERDICT r13 #4) is the DEGENERATE-TIE
+shape: 90% of all rows share ONE (stratum, score) pair, e.g. a coarse
+integer quality score with a dominant default, where a tie-group
+window alone would re-create a single giant sort task (one 3.6M-row
+TIE sort). skewfree_rank guards it itself for an integral id: the tie
+group splits into id-range buckets of 2^TIE_BUCKET_BITS rows. The
+payload reports the largest sort group with and without the buckets.
+SKEW_RANK_DEMO_r14.json records the run from before the guard was
+built in, with its unguarded skewfree arm.
 
 Usage: python scripts/skew_rank_demo.py [--rows 4000000] [--runs 3]
-       [--scenario bounded|degenerate] [--out SKEW_RANK_DEMO_r14.json]
+       [--scenario bounded|degenerate] [--out FILE.json]
 """
 
 from __future__ import annotations
@@ -58,7 +56,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from data_pipeline_mlops_spark.materialize import release_storage
-    from data_pipeline_mlops_spark.operators.skew import skewfree_rank
+    from data_pipeline_mlops_spark.operators.skew import (
+        TIE_BUCKET_BITS,
+        skewfree_rank,
+    )
     from data_pipeline_mlops_spark.session import get_spark
 
     spark = get_spark(app_name="skew-rank-demo")
@@ -99,15 +100,7 @@ def main() -> None:
             base(), part_col="stratum", order_col="score", id_col="id"
         ).withColumnRenamed("__rank", "rk")
 
-    def guarded():
-        return skewfree_rank(
-            base(), part_col="stratum", order_col="score", id_col="id",
-            tie_bucket=lambda c: F.shiftright(c, 16),
-        ).withColumnRenamed("__rank", "rk")
-
     arms = [("direct", direct), ("skewfree", skewfree)]
-    if args.scenario == "degenerate":
-        arms.append(("guarded", guarded))
     results: dict[str, dict] = {}
     for name, fn in arms:
         samples = []
@@ -139,12 +132,6 @@ def main() -> None:
     }
     assert d == s and len(d) > 0, "rank mismatch on sample"
     if args.scenario == "degenerate":
-        g = {
-            r["id"]: r["rk"]
-            for r in guarded().where(F.pmod("id", 99991) == 0).collect()
-        }
-        assert d == g, "guarded rank mismatch on sample"
-    if args.scenario == "degenerate":
         # the checkable "no single-task sort" claim: largest tie-window
         # sort partition with vs without the id-range bucket guard
         mx = lambda cols: (  # noqa: E731
@@ -153,7 +140,7 @@ def main() -> None:
         payload_extra = {
             "max_sort_group_unguarded": mx(["stratum", "score"]),
             "max_sort_group_guarded": mx(
-                ["stratum", "score", F.shiftright("id", 16)]
+                ["stratum", "score", F.shiftright("id", TIE_BUCKET_BITS)]
             ),
         }
     else:

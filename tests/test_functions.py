@@ -525,6 +525,40 @@ def test_connected_components_raises_when_not_converged(spark):
     assert got == {v: 0 for v in range(n)}
 
 
+def test_connected_components_releases_previous_round_cut(
+    spark, tmp_path, monkeypatch, restore_checkpoint_dir
+):
+    """Under reliable checkpoints, each round frees the previous
+    round's label cut: a 16-round chain leaves the edge cut and at most
+    one label cut on disk, not one per round, and its labels are the
+    exact components."""
+    import glob
+
+    from data_pipeline_mlops_spark.functions.graph import (
+        connected_components,
+    )
+
+    ckpt = tmp_path / "ckpt"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
+    chain = [(i, i + 1) for i in range(15)]  # 0-...-15: 15+ rounds
+    edges = spark.createDataFrame(
+        chain + [(100, 101), (101, 102)], "a long, b long"
+    )
+    verts = [*range(16), 100, 101, 102, 200]
+    vertices = spark.createDataFrame([(v,) for v in verts], "v long")
+    got = {
+        r.v: r.component
+        for r in connected_components(
+            vertices, edges, vertex_col="v", src_col="a", dst_col="b"
+        ).collect()
+    }
+    assert got == {
+        **{v: 0 for v in range(16)}, 100: 100, 101: 100, 102: 100,
+        200: 200,
+    }
+    assert len(glob.glob(f"{ckpt}/*/rdd-*")) <= 2
+
+
 def test_normalize_text_unifies_case_punct_and_unicode_form(spark):
     """Mixed-case + punctuation + NFD/NFC variants of the same words
     must normalize to one canonical string, so exact dedup on the
@@ -843,47 +877,58 @@ def test_skewfree_rank_matches_direct_window(spark):
 
 
 def test_skewfree_rank_tie_bucket_matches_direct_window(spark):
-    """The degenerate-tie guard (tie_bucket, VERDICT r13 #4): an
-    order-preserving coarsening of id subdivides each tie group into
-    bounded sort partitions while rank/cumsum stay bit-identical to
-    the direct window — including a planted one-score-dominates
-    stratum, bucket boundaries inside and across tie groups, and the
-    cumsum form."""
+    """The degenerate-tie guard (VERDICT r13 #4): an integral id
+    splits each tie group into 2^20-id buckets, so tie sorts stay
+    bounded while rank/cumsum stay bit-identical to the direct window —
+    with a planted one-score-dominates stratum whose ids straddle ten
+    bucket boundaries, and the cumsum form. A string id gets no
+    bucket."""
     from pyspark.sql import Window
 
-    from data_pipeline_mlops_spark.operators.skew import skewfree_rank
+    from data_pipeline_mlops_spark.operators.skew import (
+        TIE_BUCKET_BITS,
+        skewfree_rank,
+    )
 
+    # ids b * 2^20 - 15 .. b * 2^20 + 14 for b = 1..10: every block
+    # of 30 straddles one bucket boundary
+    ids = [
+        (b << TIE_BUCKET_BITS) + off
+        for b in range(1, 11) for off in range(-15, 15)
+    ]
     rows = []
     # degenerate stratum: 90% of rows share ONE score value
-    for i in range(300):
-        rows.append(("en", 1.0 if i < 270 else float(i % 5 + 2), i))
-    for i in range(300, 340):
-        rows.append(("de", float(i % 3), i))
+    for i, doc_id in enumerate(ids):
+        rows.append(("en", 1.0 if i < 270 else float(i % 5 + 2), doc_id))
+    for i in range(40):
+        rows.append(("de", float(i % 3), (11 << TIE_BUCKET_BITS) + i - 20))
     rows.append(("xx", 5.0, 999))
     df = spark.createDataFrame(rows, "lang string, score double, doc_id long")
-    bucket = lambda c: F.shiftright(c, 4)  # noqa: E731 — 16-id buckets
 
-    for desc in (False, True):
+    def direct(frame, desc):
         order = F.col("score").desc() if desc else F.col("score").asc()
         w = Window.partitionBy("lang").orderBy(order, F.col("doc_id").asc())
-        direct = {
+        return {
             (r["lang"], r["doc_id"]): r["rk"]
-            for r in df.withColumn("rk", F.row_number().over(w)).collect()
+            for r in frame.withColumn("rk", F.row_number().over(w)).collect()
         }
+
+    for desc in (False, True):
         out = skewfree_rank(
             df, part_col="lang", order_col="score", id_col="doc_id",
-            descending=desc, tie_bucket=bucket,
+            descending=desc,
         )
         got = {(r["lang"], r["doc_id"]): r["__rank"] for r in out.collect()}
-        assert got == direct, f"descending={desc}"
+        assert got == direct(df, desc), f"descending={desc}"
         assert "__tb" not in out.columns  # helper column dropped
+        assert "shiftright" in out._jdf.queryExecution().analyzed().toString()
 
     # cumsum form under the guard
     di = df.withColumn("n_tok", (F.col("score") * 3 + 1).cast("long"))
     w = Window.partitionBy("lang").orderBy(
         F.col("n_tok").desc(), F.col("doc_id").asc()
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    direct = {
+    want = {
         (r["lang"], r["doc_id"]): r["cum"]
         for r in di.withColumn("cum", F.sum("n_tok").over(w)).collect()
     }
@@ -891,10 +936,21 @@ def test_skewfree_rank_tie_bucket_matches_direct_window(spark):
         (r["lang"], r["doc_id"]): r["__cum"]
         for r in skewfree_rank(
             di, part_col="lang", order_col="n_tok", id_col="doc_id",
-            descending=True, with_cumsum=True, tie_bucket=bucket,
+            descending=True, with_cumsum=True,
         ).collect()
     }
-    assert got == direct
+    assert got == want
+
+    # a string id: no bucket, same ranks as the direct window
+    ds = df.withColumn(
+        "doc_id", F.lpad(F.col("doc_id").cast("string"), 8, "0")
+    )
+    out = skewfree_rank(
+        ds, part_col="lang", order_col="score", id_col="doc_id"
+    )
+    got = {(r["lang"], r["doc_id"]): r["__rank"] for r in out.collect()}
+    assert got == direct(ds, False)
+    assert "shiftright" not in out._jdf.queryExecution().analyzed().toString()
 
 
 # Reference builders: the column-by-column construction the SQL-string

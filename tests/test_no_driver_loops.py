@@ -2,7 +2,12 @@
 are allowed ONLY where they are architectural — serving boundaries,
 convergence scalars, metadata probes — never in operator hot paths.
 A new collect() anywhere else fails this test until it is justified
-and allowlisted here (the round-1 judge audited exactly this)."""
+and allowlisted here (the round-1 judge audited exactly this).
+
+The same allowlist style guards lineage cuts: a direct
+``localCheckpoint(`` or ``.checkpoint(`` call outside ``materialize.py``
+would make its own local-or-reliable choice instead of the one policy
+``SPARK_GRAFT_CHECKPOINT_DIR`` governs."""
 
 from __future__ import annotations
 
@@ -99,4 +104,35 @@ def test_driver_actions_only_where_allowlisted():
         "driver-side action outside the allowlist — distribute it or "
         "justify it in tests/test_no_driver_loops.py:\n"
         + "\n".join(offenders)
+    )
+
+
+# file -> why it may cut lineage directly
+CUT_ALLOWED = {
+    "data_pipeline_mlops_spark/materialize.py": (
+        "the one lineage-cut point: picks local or reliable "
+        "checkpoints for every cut in the package"
+    ),
+}
+
+CUT = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+
+
+def test_lineage_cuts_only_in_materialize():
+    root = PKG.parent
+    paths = [
+        *sorted(PKG.rglob("*.py")),
+        root / "bench.py",
+        root / "scaling_sweep.py",
+    ]
+    offenders = []
+    for path in paths:
+        rel = str(path.relative_to(root))
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            code = line.split("#", 1)[0]
+            if CUT.search(code) and rel not in CUT_ALLOWED:
+                offenders.append(f"{rel}:{i}: {line.strip()}")
+    assert not offenders, (
+        "direct lineage cut outside materialize.py — call "
+        "materialize(df, eager=...) instead:\n" + "\n".join(offenders)
     )

@@ -526,28 +526,97 @@ def test_triangle_counting_known_graph(spark):
     assert {r.item: r["count"] for r in per} == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
-def test_materialize_reliable_checkpoint_switch(spark, tmp_path, monkeypatch):
+def test_materialize_reliable_checkpoint_switch(
+    spark, tmp_path, monkeypatch, restore_checkpoint_dir
+):
     """SPARK_GRAFT_CHECKPOINT_DIR flips materialize from executor-
     memory localCheckpoint to reliable storage checkpoints: identical
-    values, checkpoint files actually land on disk."""
-    import os
+    values, checkpoint files actually land on disk. Inputs: a query
+    built on lazy cuts, and the eager pins of a dedup batch (and its
+    replay), an upsert batch and a crawl batch."""
+    import glob
 
     from data_pipeline_mlops_spark.registry import QUERIES
+    from data_pipeline_mlops_spark.streaming.crawl_stream import (
+        CrawlStore,
+        crawl_ingest_batch,
+    )
+    from data_pipeline_mlops_spark.streaming.dedup_stream import (
+        DedupIndex,
+        dedup_batch,
+    )
+    from data_pipeline_mlops_spark.streaming.upsert_sink import upsert_batch
+    from tests.conftest import SF_SMALL
 
-    sf = "/root/testdata/sf0.001"
-    baseline = sorted(
-        map(tuple, QUERIES["recommendations_capped"].spark(spark, sf).collect())
+    text = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm stone wall near the old garden gate"
     )
-    ckpt = str(tmp_path / "ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckpt)
-    out = sorted(
-        map(tuple, QUERIES["recommendations_capped"].spark(spark, sf).collect())
+    other = (
+        "distributed query engines shuffle partitions broadcast joins "
+        "and adaptive execution on columnar parquet storage readers"
     )
-    assert out == baseline
-    found = []
-    for root, _dirs, files in os.walk(ckpt):
-        found.extend(files)
-    assert found, "reliable checkpoint files should exist on disk"
+
+    def recommendations(root):
+        return QUERIES["recommendations_capped"].spark(
+            spark, SF_SMALL
+        ).collect()
+
+    def dedup(root):
+        index = DedupIndex(str(root / "idx"))
+        docs = spark.createDataFrame(
+            [(1, text), (2, text + " again"), (3, other)],
+            "doc_id long, text string",
+        )
+        first = dedup_batch(docs, index, id_col="doc_id", batch_id=1)
+        replay = dedup_batch(docs, index, id_col="doc_id", batch_id=1)
+        return first.collect() + replay.collect()
+
+    def upsert(root):
+        kw = dict(
+            path=str(root / "tbl"), key_cols=["k"], order_col="v",
+            partition_col="p",
+        )
+        schema = "k long, v long, p string"
+        upsert_batch(
+            spark.createDataFrame([(1, 10, "a"), (2, 20, "b")], schema), **kw
+        )
+        upsert_batch(
+            spark.createDataFrame([(1, 11, "a"), (3, 30, "a")], schema), **kw
+        )
+        return spark.read.parquet(kw["path"]).collect()
+
+    def crawl(root):
+        page = "<html><body><h1>t</h1><p>{}</p></body></html>"
+        batch = spark.createDataFrame(
+            [(1, page.format(text)), (2, page.format(text)),
+             (3, page.format(other))],
+            "doc_id long, html string",
+        )
+        store = CrawlStore.at(str(root / "crawl"))
+        return crawl_ingest_batch(batch, store, batch_id=1).collect()
+
+    cases = {
+        "recommendations_capped": recommendations,
+        "dedup_batch": dedup,
+        "upsert_batch": upsert,
+        "crawl_ingest_batch": crawl,
+    }
+
+    def bag(rows):
+        return sorted(map(tuple, rows), key=repr)
+
+    baseline = {
+        name: bag(fn(tmp_path / "local" / name)) for name, fn in cases.items()
+    }
+    ckpt = tmp_path / "ckpt"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
+    for name, fn in cases.items():
+        before = len(glob.glob(f"{ckpt}/*/rdd-*"))
+        assert bag(fn(tmp_path / "reliable" / name)) == baseline[name], name
+        assert len(glob.glob(f"{ckpt}/*/rdd-*")) > before, (
+            f"{name}: reliable checkpoint files should exist on disk"
+        )
 
 
 def test_rrf_fuse_hand_computed(spark):
